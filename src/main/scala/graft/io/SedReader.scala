@@ -56,6 +56,14 @@ object SedReader {
     r.load(path)
   }
 
+  /** A parquet file or flat folder of parquet files, with the schema
+    * taken from one footer read on the driver instead of Spark's
+    * schema-inference job (see [[org.apache.spark.sql.graft.ParquetFooterSchema]]);
+    * Spark infers it as usual where that does not apply. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.graft.ParquetFooterSchema.infer(spark, path)
+      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+
   /** Add a stable per-source-file id column (the multi-file/per-run
     * bookkeeping of the reference loaders, e.g. split_dld_sectors /
     * per-file metadata). File names are enumerated once on the driver,

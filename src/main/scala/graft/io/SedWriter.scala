@@ -224,13 +224,46 @@ object SedWriter {
 
   /** Export a binned histogram with its axis spec: data as parquet under
     * `<path>/data`, axis metadata (name/bins/range — the xarray coords
-    * contract) as a one-row-per-axis JSON table under `<path>/axes`. */
+    * contract) as a one-row-per-axis JSON table under `<path>/axes`. The
+    * axes table is a few lines, so it is written from the driver through
+    * the Hadoop FileSystem API — the JSON lines, overwrite and `_SUCCESS`
+    * marker of Spark's JSON writer, without a Spark job. */
   def binned(hist: DataFrame, axes: Seq[BinAxis], path: String): Unit = {
-    val spark = hist.sparkSession
-    import spark.implicits._
     parquet(hist, s"$path/data")
-    axes.map(a => (a.col, a.nBins, a.lo, a.hi))
-      .toDF("axis", "n_bins", "lo", "hi")
-      .coalesce(1).write.mode("overwrite").json(s"$path/axes")
+    writeAxes(hist.sparkSession, axes, s"$path/axes")
+  }
+
+  private[io] def writeAxes(spark: org.apache.spark.sql.SparkSession, axes: Seq[BinAxis],
+                            path: String): Unit = {
+    val lines = axes.map { a =>
+      s"""{"axis":${jsonString(a.col)},"n_bins":${a.nBins},"lo":${a.lo},"hi":${a.hi}}"""
+    }
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    fs.mkdirs(dir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000.json"))
+    try out.write(lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")).close()
+  }
+
+  /** A JSON string literal, escaped as Jackson (Spark's JSON writer) does. */
+  private def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case '\b' => b ++= "\\b"
+      case '\f' => b ++= "\\f"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04X"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
   }
 }

@@ -1044,7 +1044,7 @@ object Ann {
   // ---------------------------------------------------------------------
 
   /** Deterministic top-k per `src` by (sim DESC, dst ASC). */
-  private def topKPerSrc(edges: DataFrame, k: Int): DataFrame = {
+  private[operators] def topKPerSrc(edges: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)
     edges.withColumn("__r", row_number().over(w)).filter(col("__r") <= k).drop("__r")
   }
@@ -1062,7 +1062,7 @@ object Ann {
     * order (no extra Sort/Exchange; asserted by KnnGraphSpec's fused-
     * dedup plan test and pinned equal to dropDuplicates + row_number on
     * duplicate-heavy fixtures). */
-  private def topKDistinctPerSrc(edges: DataFrame, k: Int): DataFrame = {
+  private[operators] def topKDistinctPerSrc(edges: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)
     edges
       .withColumn("__dup", lag("dst", 1).over(w) === col("dst"))

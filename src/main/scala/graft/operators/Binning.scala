@@ -60,19 +60,21 @@ case class EdgeAxis(col: String, edges: Array[Double]) {
   * (reference: src/sed/binning/binning.py:200 bin_dataframe).
   *
   * Spark-first design: bin assignment is a per-row codegen'd projection;
-  * the histogram is ONE `groupBy(bin indices).count()` — hash partial
-  * aggregation collapses essentially all rows map-side (output cardinality
-  * is bounded by the product of bin counts, e.g. 256³, regardless of input
-  * size), so the single shuffle moves at most `∏ nBins` rows per task.
-  * That is the same asymptotic shape as the reference's per-partition
-  * numba `histogramdd` + tree-reduce sum, but distributed by Catalyst.
+  * the histogram is ONE shuffle of map-side partial counts (output
+  * cardinality is bounded by the product of bin counts, e.g. 256³,
+  * regardless of input size), so the single shuffle moves at most
+  * `∏ nBins` bins per task. Hash partial aggregation does the map side
+  * for small and sparse bin products; dense ones count into chunk arrays
+  * inside the codegen loop (see `aggregateBins`). That is the reference's
+  * per-partition numba `histogramdd` + tree-reduce sum, distributed by
+  * Catalyst.
   * The result is sparse (empty bins absent), which is the only sane
   * representation at 100 TB; `withCenters` adds physical axis coordinates.
   */
 object Binning {
 
-  /** Bin-count products at or below this take the dense-chunk aggregation
-    * path; above it the sparse flat-key groupBy. Overridable per session
+  /** Bin-count products at or below this take the dense-chunk kernel;
+    * above it the sparse flat-key groupBy. Overridable per session
     * (`spark.conf.set`) for atypical bins-vs-rows shapes. */
   val DenseMaxBinsKey = "spark.graft.binning.denseMaxBins"
   val DefaultDenseMaxBins: Long = 1L << 22
@@ -126,15 +128,21 @@ object Binning {
     *  - P ≤ 4096: flat long-key hash aggregate — the group count is tiny,
     *    codegen'd HashAggregateExec is already optimal.
     *  - 4096 < P ≤ denseMaxBins (dense regime, bins can approach row
-    *    count): group by chunk id (key >> chunkBits) and count in-chunk
-    *    offsets with the dense-array partial
-    *    [[org.apache.spark.sql.graft.DenseHistChunk]]. Each task ships one
-    *    row per non-empty chunk — bounded by P/chunkSize per task, NOT by
-    *    the number of distinct bin tuples — and `chunkBits` floors the
-    *    chunk width so there are enough chunks to spread merges across
-    *    reducers (no single-reducer funnel) while staying under the
-    *    session's ObjectHashAggregate fallback threshold (read-only — no
-    *    conf is mutated).
+    *    count): the fused kernel. Map side,
+    *    [[org.apache.spark.sql.graft.DenseHistPartial]] counts the key
+    *    into per-task `long[2^chunkBits]` chunk arrays inside the
+    *    whole-stage-codegen loop that computes it (NULL keys skipped
+    *    there; no hash map, no per-row aggregate) and ships one
+    *    varint-coded buffer per non-empty chunk — bounded by
+    *    P/chunkSize rows per task, NOT by the number of distinct bin
+    *    tuples. Reduce side, chunk c goes to reduce task c mod n
+    *    (`repartitionById`, n = min(chunks, defaultParallelism): one
+    *    wave) and the merge-only aggregate
+    *    [[org.apache.spark.sql.graft.DenseHistChunk]] sums its buffers.
+    *    `chunkBits` floors the chunk width so there are enough chunks to
+    *    spread merges across reducers while the per-task chunk groups stay
+    *    under the session's ObjectHashAggregate fallback threshold
+    *    (read-only — no conf is mutated).
     *  - P > denseMaxBins (sparse regime — physics cubes like 256³ where
     *    occupancy, not P, is small): plain flat-key hash aggregate; partial
     *    agg collapses to the non-empty bins map-side.
@@ -172,13 +180,16 @@ object Binning {
     val fb = ss.conf.get(fbKey, "128").toLong
     val keyed =
       if (total > MinDenseBins && total <= denseMax && denseViable(total, fb)) {
-        val bits = chunkBits(total, ss.sparkContext.defaultParallelism, fb)
-        val cs = 1L << bits
-        withIdx.select(key.as("__k"))
-          .select(shiftright(col("__k"), bits).as("__chunk"),
-            col("__k").bitwiseAND(lit(cs - 1)).as("__off"))
-          .groupBy("__chunk")
-          .agg(org.apache.spark.sql.graft.DenseHistChunk(col("__off"), cs.toInt).as("__counts"))
+        val par = ss.sparkContext.defaultParallelism
+        val bits = chunkBits(total, par, fb)
+        val nChunks = ((total + (1L << bits) - 1) >> bits).toInt
+        // one reduce wave: chunk c merges in reduce task c mod parts
+        val parts = math.min(nChunks, par)
+        org.apache.spark.sql.graft.DenseHistPartial(withIdx.select(key.cast("long").as("__k")), bits, nChunks)
+          .withColumn("__part", (col("__chunk") % lit(parts.toLong)).cast("int"))
+          .repartitionById(parts, col("__part"))
+          .groupBy("__part", "__chunk")
+          .agg(org.apache.spark.sql.graft.DenseHistChunk(col("__buf"), 1 << bits).as("__counts"))
           .select(col("__chunk"), posexplode(col("__counts")).as(Seq("__pos", "cnt")))
           .filter(col("cnt") > 0)
           .select((shiftleft(col("__chunk"), bits) + col("__pos")).as("__k"), col("cnt"))

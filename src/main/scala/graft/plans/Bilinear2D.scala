@@ -1,6 +1,8 @@
 // Same packaging rationale as FloatVecDot.scala.
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -12,9 +14,13 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType}
   * deformation-field application (reference: src/sed/calibrator/
   * momentum.py:2105 `apply_dfield`, scipy `map_coordinates(order=1)`).
   *
-  * The grid rides along as a plan reference object (`addReferenceObj`), so
-  * it is shipped once per task in the serialized plan — NOT embedded in
-  * the generated source or re-read per row. Out-of-range coordinates are
+  * Generated code reads the grid from a broadcast shared by every plan
+  * over the same grid array ([[Bilinear2D.broadcastGrid]]), fetched once
+  * per task — so a chain rebuilt per pass ships a broadcast handle, not
+  * the grid, in each task binary; where no broadcast can be made (code
+  * generated inside a task) the grid rides along as a plan reference
+  * object instead. It is never embedded in the generated source or
+  * re-read per row. Out-of-range coordinates are
   * clamped to the grid edge (map_coordinates `mode='nearest'`-compatible
   * for the in-hull use sed makes of it). Evaluation is branch-light
   * codegen inside the projection: zero shuffles, arbitrarily wide scans.
@@ -55,7 +61,13 @@ case class Bilinear2D(left: Expression, right: Expression,
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gridRef = ctx.addReferenceObj("grid", grid, "double[]")
+    val gridRef = Bilinear2D.broadcastGrid(grid) match {
+      case Some(bc) =>
+        val bcRef = ctx.addReferenceObj("gridBroadcast", bc)
+        ctx.addMutableState("double[]", "grid", v => s"$v = (double[]) $bcRef.value();",
+          forceInline = true)
+      case None => ctx.addReferenceObj("grid", grid, "double[]")
+    }
     nullSafeCodeGen(ctx, ev, (xa, ya) => {
       val x = ctx.freshName("x"); val y = ctx.freshName("y")
       val x0 = ctx.freshName("x0"); val y0 = ctx.freshName("y0")
@@ -80,6 +92,36 @@ case class Bilinear2D(left: Expression, right: Expression,
 }
 
 object Bilinear2D {
+  /** Identity of a grid array within one SparkContext. */
+  private final class GridKey(val grid: Array[Double], val sc: SparkContext) {
+    override def hashCode: Int = System.identityHashCode(grid) * 31 + System.identityHashCode(sc)
+    override def equals(o: Any): Boolean = o match {
+      case k: GridKey => (k.grid eq grid) && (k.sc eq sc)
+      case _ => false
+    }
+  }
+
+  // the most recently used grids' broadcasts; an evicted one is cleaned
+  // up by Spark's ContextCleaner once no plan references it
+  private val MaxCached = 8
+  private val cache = new java.util.LinkedHashMap[GridKey, Broadcast[Array[Double]]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[GridKey, Broadcast[Array[Double]]]): Boolean =
+      size > MaxCached
+  }
+
+  /** The broadcast of `grid` on the active SparkContext, made once per grid
+    * array; `None` inside a task (code generated on an executor). */
+  def broadcastGrid(grid: Array[Double]): Option[Broadcast[Array[Double]]] =
+    if (TaskContext.get() != null) None
+    else SparkContext.getActive.filterNot(_.isStopped).map { sc =>
+      cache.synchronized {
+        val key = new GridKey(grid, sc)
+        var bc = cache.get(key)
+        if (bc == null) { bc = sc.broadcast(grid); cache.put(key, bc) }
+        bc
+      }
+    }
+
   def apply(x: Column, y: Column, grid: Array[Double], rows: Int, cols: Int): Column =
     ExpressionUtils.column(Bilinear2D(
       ExpressionUtils.expression(x), ExpressionUtils.expression(y), grid, rows, cols))

@@ -3,32 +3,88 @@
 // private[sql], so the expression lives under org.apache.spark.sql.
 package org.apache.spark.sql.graft
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, DataType, LongType}
 
-/** Dense per-chunk histogram partial aggregate: counts `chunkSize` bin
-  * offsets into ONE flat `Array[Long]` buffer — array indexing instead of
-  * one hash-map entry per distinct bin tuple, which is what makes dense
-  * (bins ≈ rows) histogram regimes cheap (the reference gets the same
-  * effect from per-partition numba `histogramdd` + tree-reduce,
-  * /root/reference/src/sed/binning/numba_bin.py:104 numba_histogramdd).
+/** Wire format of one dense histogram chunk: the non-zero slots of a
+  * `long[chunkSize]` count array as (gap, count) pairs of unsigned LEB128
+  * varints, where gap is the number of zero slots skipped since the
+  * previous non-zero one. A dense chunk costs about two bytes per
+  * occupied bin (gap 0, small count), a sparse one a few bytes per
+  * occupied bin — against 8 bytes per slot for the raw array. */
+object DenseHistCodec {
+  private def varLen(v: Long): Int = {
+    var n = 1
+    var x = v >>> 7
+    while (x != 0L) { n += 1; x >>>= 7 }
+    n
+  }
+
+  private def putVar(out: Array[Byte], at: Int, v: Long): Int = {
+    var p = at
+    var x = v
+    while ((x & ~0x7fL) != 0L) { out(p) = ((x & 0x7f) | 0x80).toByte; p += 1; x >>>= 7 }
+    out(p) = x.toByte
+    p + 1
+  }
+
+  def encode(counts: Array[Long]): Array[Byte] = {
+    var size = 0
+    var prev = -1
+    var i = 0
+    while (i < counts.length) {
+      if (counts(i) != 0L) { size += varLen(i - prev - 1L) + varLen(counts(i)); prev = i }
+      i += 1
+    }
+    val out = new Array[Byte](size)
+    var p = 0
+    prev = -1
+    i = 0
+    while (i < counts.length) {
+      if (counts(i) != 0L) { p = putVar(out, p, i - prev - 1L); p = putVar(out, p, counts(i)); prev = i }
+      i += 1
+    }
+    out
+  }
+
+  /** Adds an encoded chunk into `into` (same chunk size). */
+  def addTo(bytes: Array[Byte], into: Array[Long]): Unit = {
+    var p = 0
+    var slot = -1
+    var gap = true
+    var v = 0L
+    var shift = 0
+    while (p < bytes.length) {
+      val b = bytes(p)
+      p += 1
+      v |= (b & 0x7fL) << shift
+      shift += 7
+      if (b >= 0) {
+        if (gap) slot += v.toInt + 1 else into(slot) += v
+        gap = !gap
+        v = 0L
+        shift = 0
+      }
+    }
+  }
+}
+
+/** Reduce side of the dense binning kernel: merges the encoded chunk
+  * buffers that [[DenseHistPartialExec]] emits per (map task, non-empty
+  * chunk) into ONE `long[chunkSize]` count array per chunk, and returns it
+  * as an unboxed long array. There is no per-event path: the per-event
+  * count happens map-side inside the whole-stage-codegen loop, so this
+  * aggregate sees one row per map task and chunk, and its groups (one per
+  * chunk) stay under the ObjectHashAggregate fallback threshold by
+  * construction (`Binning.chunkBits`).
   *
-  * Used by [[graft.operators.Binning]] grouped by a chunk id (flat bin key
-  * >> log2(chunkSize)), so one partial-agg row per (task, non-empty chunk)
-  * reaches the shuffle — never one row per distinct bin tuple — and the
-  * merge work spreads over reducers instead of funnelling into one.
-  *
-  * Serialization is adaptive: mostly-empty chunks (boundary tasks, sparse
-  * data that slipped under the dense threshold) ship as (offset, count)
-  * pairs, dense ones as the raw long array.
+  * The reference gets the same histogram from per-partition numba
+  * `histogramdd` + tree-reduce (src/sed/binning/numba_bin.py:104).
   */
 case class DenseHistChunk(
     child: Expression,
@@ -40,7 +96,7 @@ case class DenseHistChunk(
 
   require(chunkSize > 0)
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "dense_hist_chunk"
@@ -49,7 +105,7 @@ case class DenseHistChunk(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) buf(v.asInstanceOf[Long].toInt) += 1L
+    if (v != null) DenseHistCodec.addTo(v.asInstanceOf[Array[Byte]], buf)
     buf
   }
 
@@ -59,42 +115,13 @@ case class DenseHistChunk(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  override def eval(buf: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(buf)
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    var nz = 0
-    var i = 0
-    while (i < chunkSize) { if (buf(i) != 0L) nz += 1; i += 1 }
-    // sparse entry = 12 bytes vs dense 8: pairs win below 2/3 occupancy
-    if (nz.toLong * 12 < chunkSize.toLong * 8) {
-      val bb = ByteBuffer.allocate(4 + nz * 12)
-      bb.putInt(nz)
-      i = 0
-      while (i < chunkSize) {
-        if (buf(i) != 0L) { bb.putInt(i); bb.putLong(buf(i)) }
-        i += 1
-      }
-      bb.array()
-    } else {
-      val bb = ByteBuffer.allocate(4 + chunkSize * 8)
-      bb.putInt(-1)
-      i = 0
-      while (i < chunkSize) { bb.putLong(buf(i)); i += 1 }
-      bb.array()
-    }
-  }
+  override def serialize(buf: Array[Long]): Array[Byte] = DenseHistCodec.encode(buf)
 
   override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val tag = bb.getInt
     val out = new Array[Long](chunkSize)
-    if (tag == -1) {
-      var i = 0
-      while (i < chunkSize) { out(i) = bb.getLong; i += 1 }
-    } else {
-      var n = 0
-      while (n < tag) { val idx = bb.getInt; out(idx) = bb.getLong; n += 1 }
-    }
+    DenseHistCodec.addTo(bytes, out)
     out
   }
 
@@ -107,9 +134,9 @@ case class DenseHistChunk(
 }
 
 object DenseHistChunk {
-  /** Aggregate Column: dense count array (length `chunkSize`) of the
-    * in-chunk offsets in `off`. */
-  def apply(off: Column, chunkSize: Int): Column =
+  /** Aggregate Column: the merged dense count array (length `chunkSize`)
+    * of the encoded chunk buffers in `buf`. */
+  def apply(buf: Column, chunkSize: Int): Column =
     ExpressionUtils.column(
-      DenseHistChunk(ExpressionUtils.expression(off), chunkSize).toAggregateExpression())
+      DenseHistChunk(ExpressionUtils.expression(buf), chunkSize).toAggregateExpression())
 }

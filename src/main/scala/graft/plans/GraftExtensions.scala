@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers graft's native expressions as SQL functions, so
   * `spark.sql("SELECT float_vec_dot(a, b) ...")` works alongside the
-  * Column API. Two entry points:
+  * Column API, and the planner strategy of the dense binning kernel
+  * ([[DenseHistStrategy]]). Two entry points:
   *
   *  - config path: `.config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")`
   *    at session build (the standard SparkSessionExtensions hook);
@@ -15,10 +16,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    (useful when the session is built by a host application).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.definitions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectPlannerStrategy(_ => DenseHistStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -51,9 +54,11 @@ object GraftExtensions {
         es(1).eval().asInstanceOf[Number].intValue())))
 
   /** Register on an already-built session. */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
     definitions.foreach { case (name, i, builder) =>
       spark.sessionState.functionRegistry
         .registerFunction(FunctionIdentifier(name), i, builder)
     }
+    DenseHistStrategy.setup(spark)
+  }
 }

@@ -350,9 +350,11 @@ case class SedProcessor(dataframe: DataFrame,
 
 object SedProcessor {
   /** Load a folder of parquet files as the event stream (the generic
-    * loader path, loader/generic/loader.py:23). */
+    * loader path, loader/generic/loader.py:23). The schema comes from one
+    * footer read on the driver, so loading runs no Spark job
+    * ([[graft.io.SedReader.parquet]]). */
   def fromParquet(spark: org.apache.spark.sql.SparkSession, path: String,
                   xCol: String = "x", yCol: String = "y",
                   tofCol: String = "tof"): SedProcessor =
-    SedProcessor(spark.read.parquet(path), None, xCol, yCol, tofCol)
+    SedProcessor(graft.io.SedReader.parquet(spark, path), None, xCol, yCol, tofCol)
 }

@@ -106,8 +106,10 @@ object Tables {
     df
   }
 
+  /** `dir/name.parquet`, schema from one footer read (no Spark job —
+    * [[graft.io.SedReader.parquet]]), checked against the contract. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    checked(name, spark.read.parquet(s"$dir/$name.parquet"))
+    checked(name, graft.io.SedReader.parquet(spark, s"$dir/$name.parquet"))
 
   /** Normalize an event-time column to int64 microseconds since the epoch
     * (UTC), emitted as `as` (default `ts_us`), dropping the original.

@@ -915,9 +915,9 @@ object SedStreaming {
   def scanSplitFor(s: org.apache.spark.sql.SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val maxLen = fs.listStatus(p).map(_.getPath)
-      .filter(f => f.getName.startsWith("part-") || f.getName.startsWith("chunk-"))
-      .map(fs.getFileStatus(_).getLen).foldLeft(0L)(math.max)
+    val maxLen = fs.listStatus(p)
+      .filter { st => val n = st.getPath.getName; n.startsWith("part-") || n.startsWith("chunk-") }
+      .map(_.getLen).foldLeft(0L)(math.max)
     val cores = math.max(1L, s.sparkContext.defaultParallelism.toLong)
     math.min(128L << 20, math.max(1L << 20, maxLen / cores + 1))
   }

@@ -194,6 +194,29 @@ class CalibrateSpec extends SparkSpecBase {
     pts.zip(got).foreach { case ((x, y), g) => assert(math.abs(g - ref(x, y)) < 1e-12) }
   }
 
+  test("Bilinear2D in a codegen stage reads its grid from one broadcast per grid array") {
+    val rows = 8; val cols = 8
+    val grid = Array.tabulate(rows * cols)(i => math.sin(i * 0.37) * 10.0)
+    val bc = Bilinear2D.broadcastGrid(grid)
+    assert(bc.isDefined && bc.get.value.eq(grid))
+    assert(Bilinear2D.broadcastGrid(grid).get eq bc.get, "one broadcast per grid array")
+    assert(!(Bilinear2D.broadcastGrid(grid.clone()).get eq bc.get))
+    def values(s: org.apache.spark.sql.SparkSession): Seq[Double] =
+      s.range(0, 400, 1, 4)
+        .select(((col("id") % 9) * 0.87).as("x"), ((col("id") / 50) * 0.93).as("y"))
+        .select(Bilinear2D(col("x"), col("y"), grid, rows, cols).as("v"))
+        .collect().map(_.getDouble(0)).toSeq
+    val interpreted = (0 until 400).map { i =>
+      Bilinear2D(org.apache.spark.sql.catalyst.expressions.Literal((i % 9) * 0.87),
+        org.apache.spark.sql.catalyst.expressions.Literal((i / 50.0) * 0.93), grid, rows, cols).eval()
+        .asInstanceOf[Double]
+    }
+    assert(values(spark) == interpreted)
+    val noCodegen = spark.newSession()
+    noCodegen.conf.set("spark.sql.codegen.wholeStage", "false")
+    assert(values(noCodegen) == interpreted)
+  }
+
   test("applyDfield: identity field reproduces scaled coordinates") {
     val rows = 16; val cols = 16
     val rd = Array.tabulate(rows * cols)(i => (i / cols).toDouble)

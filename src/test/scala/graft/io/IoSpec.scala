@@ -259,4 +259,78 @@ class IoSpec extends SparkSpecBase {
     val meta = SedReader.read(spark, s"$dir/b/axes", "json").collect()
     assert(meta.length == 1 && meta(0).getAs[String]("axis") == "value")
   }
+
+  /** Spark jobs started by `body`. Listener events arrive in order, so a
+    * described sentinel job run after `body` bounds the wait. */
+  private def jobsDuring(body: => Unit): Int = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobsDuring sentinel")
+      sc.parallelize(Seq(1)).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains("jobsDuring sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("jobsDuring sentinel"))
+      seen.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("binned axes JSON: Spark's JSON lines and _SUCCESS marker, overwritten, no Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_io").toString
+    val axes = Seq(BinAxis("kx", 96, -1.7, 1.7), BinAxis("e\"q\\u", 128, -4.0E-5, 2.5E7),
+      BinAxis("t\tab", 2, 0.0, 1.0))
+    SedWriter.writeAxes(spark, Seq(BinAxis("kx", 3, 0.0, 1.0)), s"$dir/axes") // overwritten below
+    assert(jobsDuring(SedWriter.writeAxes(spark, axes, s"$dir/axes")) == 0)
+    val axesDir = new java.io.File(s"$dir/axes")
+    val parts = axesDir.listFiles().filter(_.getName.endsWith(".json"))
+    assert(parts.length == 1 && new java.io.File(axesDir, "_SUCCESS").exists())
+    val lines = scala.io.Source.fromFile(parts.head, "UTF-8").getLines().toSeq
+    val sparkLines = axes.map(a => (a.col, a.nBins, a.lo, a.hi))
+      .toDF("axis", "n_bins", "lo", "hi").toJSON.collect().toSeq
+    assert(lines == sparkLines)
+    val back = SedReader.read(spark, s"$dir/axes", "json")
+      .select("axis", "n_bins", "lo", "hi").as[(String, Long, Double, Double)].collect().toSeq
+    assert(back == axes.map(a => (a.col, a.nBins.toLong, a.lo, a.hi)))
+  }
+
+  test("parquet reader: footer schema equals Spark's inference, with no Spark job") {
+    val tables = graft.sed.Tables.all.map(t => s"$Sf/$t.parquet")
+      .filter(p => new java.io.File(p).exists())
+    assert(tables.size >= 8)
+    val dir = Files.createTempDirectory("graft_io").toString
+    val flat = s"$dir/flat"
+    spark.range(0, 16000, 1, 16).selectExpr("id", "CAST(id AS DOUBLE) AS x",
+      "CAST(id % 7 AS INT) AS s", "CAST(id AS STRING) AS str", "array(id, id) AS arr",
+      "named_struct('a', id, 'b', 'z') AS st").write.parquet(flat)
+    assert(new java.io.File(flat).listFiles().count(_.getName.endsWith(".parquet")) == 16)
+    (tables :+ flat).foreach { p =>
+      assert(org.apache.spark.sql.graft.ParquetFooterSchema.infer(spark, p).isDefined, p)
+      assert(SedReader.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    assert(SedReader.parquet(spark, flat).count() == 16000L)
+    // partition directories and schema merging fall back to Spark's inference
+    val parted = s"$dir/parted"
+    spark.range(0, 100).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(parted)
+    assert(org.apache.spark.sql.graft.ParquetFooterSchema.infer(spark, parted).isEmpty)
+    assert(SedReader.parquet(spark, parted).schema == spark.read.parquet(parted).schema)
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    assert(org.apache.spark.sql.graft.ParquetFooterSchema.infer(merging, flat).isEmpty)
+    // the reader calls themselves run no Spark job
+    assert(jobsDuring {
+      SedReader.parquet(spark, flat)
+      graft.sed.SedProcessor.fromParquet(spark, flat)
+      graft.sed.Tables.load(spark, Sf, "events")
+    } == 0)
+    assert(jobsDuring(spark.read.parquet(flat)) >= 1, "sanity: Spark's inference runs a job")
+  }
 }

@@ -1,7 +1,13 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{DenseHistCodec, DenseHistPartialExec, DenseHistStrategy}
 
 class BinningSpec extends SparkSpecBase {
   import spark.implicits._
@@ -135,27 +141,6 @@ class BinningSpec extends SparkSpecBase {
     assert(hist.agg(sum("cnt")).head().getLong(0) == 2000L)
   }
 
-  test("dense-chunk and sparse flat-key paths agree on random shapes") {
-    val rnd = new scala.util.Random(23)
-    for (_ <- 0 until 3) {
-      // product > 4096 -> dense regime by default; values straddle the
-      // range so the NULL-key drop is exercised on both paths
-      val n1 = 70 + rnd.nextInt(60); val n2 = 70 + rnd.nextInt(60)
-      val data = Seq.fill(5000)((rnd.nextDouble() * 120.0 - 10.0, rnd.nextDouble() * 120.0 - 10.0))
-      val axes = Seq(BinAxis("a", n1, 0.0, 100.0), BinAxis("b", n2, 0.0, 100.0))
-      val dense = Binning.histogram(data.toDF("a", "b"), axes)
-        .as[(Long, Long, Long)].collect().toSet
-      // independent session with the dense path disabled -> sparse flat key
-      val s2 = spark.newSession()
-      s2.conf.set(Binning.DenseMaxBinsKey, "1")
-      val df2 = s2.createDataFrame(data).toDF("a", "b")
-      val sparse = Binning.histogram(df2, axes)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(dense == sparse, s"paths disagree for ${n1}x$n2")
-      assert(dense.nonEmpty)
-    }
-  }
-
   test("range drop is NOT pushed through an expensive transform chain") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
     // chain: dfield bilinear (marked UserDefinedExpression) -> derived axis
@@ -186,5 +171,149 @@ class BinningSpec extends SparkSpecBase {
     val total = Binning.histogram(df, axes).agg(sum("cnt")).as[Long].head()
     val expected = df.filter($"value".between(0, 500) && $"user_id".between(0, 150)).count()
     assert(total == expected)
+  }
+
+  // ---- dense binning kernel (map-side count fused into whole-stage codegen)
+
+  /** Sessions sharing the suite's SparkContext: the default dense plan,
+    * the same with whole-stage codegen off (the exec's doExecute twin),
+    * and the sparse flat-key plan (dense regime disabled). */
+  private lazy val codegenOff: SparkSession = {
+    val s = spark.newSession(); s.conf.set("spark.sql.codegen.wholeStage", "false"); s
+  }
+  private lazy val sparseOnly: SparkSession = {
+    val s = spark.newSession(); s.conf.set(Binning.DenseMaxBinsKey, "1"); s
+  }
+
+  private def hist2(s: SparkSession, data: Seq[(Double, Double)], parts: Int,
+                    axes: Seq[BinAxis]): Set[(Long, Long, Long)] = {
+    val df = s.createDataFrame(data).toDF("a", "b").repartition(parts)
+    Binning.histogram(df, axes).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
+  /** numpy-semantics count on the driver. */
+  private def driverCount(data: Seq[(Double, Double)], axes: Seq[BinAxis]): Set[(Long, Long, Long)] = {
+    def idx(v: Double, a: BinAxis): Option[Long] =
+      if (v >= a.lo && v <= a.hi) Some(math.min(math.floor((v - a.lo) / a.step).toLong, a.nBins - 1L))
+      else None
+    data.flatMap { case (x, y) =>
+      for (i <- idx(x, axes(0)); j <- idx(y, axes(1))) yield (i, j)
+    }.groupBy(identity).map { case ((i, j), xs) => (i, j, xs.size.toLong) }.toSet
+  }
+
+  /** Every node of an executed plan, query stages included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  /** The operators compiled into one whole-stage-codegen function. */
+  private def fused(w: WholeStageCodegenExec): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(walk)
+    }
+    walk(w.child)
+  }
+
+  test("dense-chunk and sparse flat-key paths agree on random shapes") {
+    // the dense kernel, with codegen on and off, against the sparse
+    // flat-key path and a driver-side count
+    val rnd = new scala.util.Random(41)
+    for (round <- 0 until 4) {
+      val n1 = 65 + rnd.nextInt(90); val n2 = 65 + rnd.nextInt(90) // product > 4096
+      val axes = Seq(BinAxis("a", n1, 0.0, 100.0), BinAxis("b", n2, -5.0, 95.0))
+      // values straddle both ranges; a hot spot puts counts > 127
+      // (multi-byte varints) into the encoded chunks
+      val data = Seq.fill(6000) {
+        if (rnd.nextInt(4) == 0) (50.0 + rnd.nextDouble(), 40.0 + rnd.nextDouble())
+        else (rnd.nextDouble() * 120.0 - 10.0, rnd.nextDouble() * 120.0 - 15.0)
+      }
+      val parts = 1 + round
+      val want = driverCount(data, axes)
+      assert(want.exists(_._3 > 127))
+      assert(hist2(spark, data, parts, axes) == want, s"codegen, ${n1}x$n2")
+      assert(hist2(codegenOff, data, parts, axes) == want, s"no codegen, ${n1}x$n2")
+      assert(hist2(sparseOnly, data, parts, axes) == want, s"sparse, ${n1}x$n2")
+    }
+  }
+
+  test("dense kernel edge cases: chunk offsets 0 and 2^bits-1, last partial chunk, empty and all-out-of-range input") {
+    // 100 x 70 = 7000 bins: dense regime, and 7000 is no multiple of the
+    // chunk width, so the last chunk is partial
+    val axes = Seq(BinAxis("a", 100, 0.0, 100.0), BinAxis("b", 70, 0.0, 70.0))
+    val total = 7000L
+    val bits = Binning.chunkBits(total, spark.sparkContext.defaultParallelism, 128)
+    val cs = 1L << bits
+    assert(total % cs != 0, s"chunk width $cs divides $total")
+    val keys = (0L until total by cs).flatMap(c => Seq(c, c + cs - 1)).filter(_ < total) :+ (total - 1)
+    // bin centers: key k = a_bin * 70 + b_bin
+    val rows = keys.flatMap(k => Seq.fill(1 + (k % 3).toInt)(((k / 70) + 0.5, (k % 70) + 0.5)))
+    val want = driverCount(rows, axes)
+    assert(want.map(t => t._1 * 70 + t._2) == keys.toSet)
+    for (s <- Seq(spark, codegenOff); parts <- Seq(1, 3)) {
+      assert(hist2(s, rows, parts, axes) == want, s"parts=$parts")
+      assert(hist2(s, Seq((-1.0, 5.0), (5.0, 71.0), (101.0, 101.0)), parts, axes).isEmpty,
+        "all out of range")
+      assert(hist2(s, Seq.empty, parts, axes).isEmpty, "empty input")
+    }
+  }
+
+  test("dense regime: map-side count sits inside whole-stage codegen, one reduce wave") {
+    val axes = Seq(BinAxis("a", 100, 0.0, 100.0), BinAxis("b", 70, 0.0, 70.0))
+    val rnd = new scala.util.Random(5)
+    val df = Seq.fill(3000)((rnd.nextDouble() * 100.0, rnd.nextDouble() * 70.0)).toDF("a", "b")
+      .repartition(3)
+    val hist = Binning.histogram(df, axes)
+    assert(hist.queryExecution.executedPlan.toString
+      .toLowerCase.contains("dense_hist_chunk"), "reduce side merges with the chunk aggregate")
+    assert(hist.agg(sum("cnt")).head().getLong(0) == 3000L)
+    hist.collect()
+    val all = nodes(hist.queryExecution.executedPlan)
+    val fusedKernel = all.collect { case w: WholeStageCodegenExec => fused(w) }
+      .filter(_.exists(_.isInstanceOf[DenseHistPartialExec]))
+    assert(fusedKernel.size == 1, "DenseHistPartialExec is not compiled into a codegen stage")
+    // the operators of each shuffle map stage, without its input stages
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: p.children.filterNot(_.isInstanceOf[QueryStageExec]).flatMap(stage)
+    val mapStage = all.collect { case q: ShuffleQueryStageExec => stage(q.plan) }
+      .filter(_.exists(_.isInstanceOf[DenseHistPartialExec]))
+    assert(mapStage.size == 1)
+    assert(!mapStage.head.exists {
+      case _: ObjectHashAggregateExec | _: HashAggregateExec | _: SortAggregateExec => true
+      case _ => false
+    }, "map side aggregates per row")
+    val shuffles = mapStage.head.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1)
+    assert(shuffles.head.numPartitions <= spark.sparkContext.defaultParallelism,
+      s"${shuffles.head.numPartitions} reduce tasks")
+    // codegen off: the same operator runs as its doExecute twin
+    val off = Binning.histogram(codegenOff.createDataFrame(Seq((1.5, 2.5))).toDF("a", "b"), axes)
+    assert(off.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq == Seq((1L, 2L, 1L)))
+    val offNodes = nodes(off.queryExecution.executedPlan)
+    assert(offNodes.exists(_.isInstanceOf[DenseHistPartialExec]))
+    assert(!offNodes.exists(_.isInstanceOf[WholeStageCodegenExec]))
+  }
+
+  test("dense kernel strategy registration is idempotent per session") {
+    val s = spark.newSession()
+    assert(!s.experimental.extraStrategies.contains(DenseHistStrategy))
+    DenseHistStrategy.setup(s)
+    DenseHistStrategy.setup(s)
+    org.apache.spark.sql.graft.GraftExtensions.register(s)
+    assert(s.experimental.extraStrategies.count(_ == DenseHistStrategy) == 1)
+  }
+
+  test("chunk codec round-trips sparse, dense and large counts") {
+    val rnd = new scala.util.Random(3)
+    for (fill <- Seq(0.0, 0.001, 0.3, 1.0)) {
+      val a = Array.tabulate(4096)(_ => if (rnd.nextDouble() < fill) 1L + rnd.nextInt(300) else 0L)
+      a(4095) = 1L << 40
+      val back = new Array[Long](4096)
+      DenseHistCodec.addTo(DenseHistCodec.encode(a), back)
+      assert(back.sameElements(a), s"fill $fill")
+    }
   }
 }

@@ -77,4 +77,30 @@ class KnnGraphSpec extends SparkSpecBase {
         .as[(Long, Long, Long, Double)].collect().toSet
     assert(run() == run())
   }
+
+  test("fused-dedup top-k: one Exchange and Sort, equal to dropDuplicates + top-k") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val rnd = new scala.util.Random(11)
+    // every (src, dst) pair carries one sim (as every edge producer
+    // guarantees); pairs repeat up to 4 times, sims tie across dsts
+    val pairs = for (src <- 0L until 40L; dst <- 0L until 25L if rnd.nextInt(3) > 0)
+      yield (src, dst, rnd.nextInt(6) / 5.0)
+    val edges = pairs.flatMap(p => Seq.fill(1 + rnd.nextInt(4))(p)).toDF("src", "dst", "sim")
+    assert(edges.count() > edges.dropDuplicates("src", "dst").count())
+    for (k <- Seq(1, 3, 8)) {
+      val fused = Ann.topKDistinctPerSrc(edges, k)
+      val plan = fused.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.size == 1, plan.toString)
+      assert(plan.collect { case s: SortExec => s }.size == 1, plan.toString)
+      val want = Ann.topKPerSrc(edges.dropDuplicates("src", "dst"), k)
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+      val got = fused.as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(got == want && got.nonEmpty, s"k=$k")
+    }
+  }
 }

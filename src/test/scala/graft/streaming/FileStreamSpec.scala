@@ -47,4 +47,22 @@ class FileStreamSpec extends SparkSpecBase {
     assertTwin(StreamingQueries.streamNearDedup(spark, Sf),
       StreamingQueries.memoryTwins.streamNearDedup(spark, Sf))
   }
+
+  test("scanSplitFor sizes the split from the listed staged-file lengths") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_split").toFile
+    def file(name: String, len: Long): Unit = {
+      val f = new java.io.RandomAccessFile(new java.io.File(dir, name), "rw")
+      try f.setLength(len) finally f.close()
+    }
+    val cores = math.max(1L, spark.sparkContext.defaultParallelism.toLong)
+    def split(maxLen: Long) = math.min(128L << 20, math.max(1L << 20, maxLen / cores + 1))
+    file("part-00000.parquet", 300L << 10)
+    assert(SedStreaming.scanSplitFor(spark, dir.toString) == split(300L << 10)) // 1 MiB floor
+    file("chunk-00001.parquet", 37L << 20)
+    file("part-00002.parquet", 9L << 20)
+    file("other.parquet", 900L << 20) // not a staged file: ignored
+    assert(SedStreaming.scanSplitFor(spark, dir.toString) == split(37L << 20))
+    assert(split(37L << 20) > (1L << 20))
+    dir.listFiles().foreach(_.delete()); dir.delete()
+  }
 }
