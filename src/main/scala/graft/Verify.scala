@@ -18,6 +18,11 @@ object Verify {
       // under a 183-entry suite (and within single multi-stage queries),
       // serializing all tasks behind Janino recompiles of evicted classes
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // the cache key includes the task's class loader, and with artifact
+      // isolation every streaming query's cloned session gets a fresh
+      // one: each stream entry would compile its classes again. Nothing
+      // here adds jars or artifacts to a session.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -64,6 +64,12 @@ object SedReader {
     org.apache.spark.sql.graft.ParquetFooterSchema.infer(spark, path)
       .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
 
+  /** [[parquet]] over explicit parquet FILE paths (one footer read, the
+    * first file in path order, as Spark's inference would pick). */
+  def parquetFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    org.apache.spark.sql.graft.ParquetFooterSchema.inferFiles(spark, files)
+      .fold(spark.read.parquet(files: _*))(s => spark.read.schema(s).parquet(files: _*))
+
   /** Add a stable per-source-file id column (the multi-file/per-run
     * bookkeeping of the reference loaders, e.g. split_dld_sectors /
     * per-file metadata). File names are enumerated once on the driver,

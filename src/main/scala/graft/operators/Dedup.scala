@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.io.SedReader
 import graft.functions.VectorFunctions
 
 /** Document deduplication for large-scale training-data pipelines: exact
@@ -756,61 +757,141 @@ object Dedup {
     *    ≥ `minJaccard` (match_id = the smallest verified corpus keeper,
     *    n_near = how many corpus reps verified);
     *  - `new`: everything else (match_id = -1).
-    * Scale shape: the delta is the SMALL side of every join — AQE
-    * broadcasts it against the index scans, so per-batch cost is
-    * O(|delta| + matched index rows), never O(corpus). Exact matches
-    * join on the 16-byte hash; band candidates join on (band, key) with
-    * the index's bucket cap already applied at build time. */
+    * Scale shape: the delta is the SMALL side of every join. Each of the
+    * three index tables is scanned once, against an explicit
+    * `broadcast` of a delta-side relation (hashes against the delta's
+    * content hashes, bands against its band keys, shingles against the
+    * band candidates), so per-batch cost is O(|delta| + matched index
+    * rows), never O(corpus), and the plan does not depend on run-time
+    * size estimates. The probe results and the delta rows meet in ONE
+    * shuffle on the document id, where Jaccard is verified and each
+    * row's status resolved. A missing index (or table) classifies as
+    * empty. Exact matches join on the 16-byte hash; band candidates
+    * join on (band, key) with the index's bucket cap already applied at
+    * build time. */
   def incrementalDedup(spark: org.apache.spark.sql.SparkSession,
                        delta: DataFrame, idCol: String, textCol: String,
                        path: String,
                        numHashes: Int = 12, rowsPerBand: Int = 3,
-                       shingleN: Int = 3, minJaccard: Double = 0.8): DataFrame = {
-    val idxHashes = spark.read.parquet(s"$path/hashes")
-    val idxBands = spark.read.parquet(s"$path/bands")
-    val idxSh = spark.read.parquet(s"$path/shingles")
-    val hashed = delta.select(col(idCol), col(textCol))
-      .withColumn("__h", md5(col(textCol).cast("binary")))
-    val dkeep = hashed.groupBy("__h").agg(min(col(idCol)).as("__dk"))
-    val tagged = hashed
-      .join(idxHashes.select(col("content_hash").as("__h"),
-        col("keeper").as("__ck")), Seq("__h"), "left")
-      .join(dkeep, "__h")
-    // near-dup candidates: batch-unique exact keepers only — copies are
-    // already classified, and a copy's near-matches equal its keeper's
-    val surv = tagged.filter(col("__ck").isNull && col(idCol) === col("__dk"))
-      .select(col(idCol), col(textCol))
+                       shingleN: Int = 3, minJaccard: Double = 0.8): DataFrame =
+    classifyAgainst(spark, deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN),
+        idCol, path, minJaccard)._1
+      .select(col(idCol), col("status"), col("match_id"), col("n_near"))
+
+  /** The delta side of [[incrementalDedup]], one row per delta document:
+    * the id, content hash `__h`, in-batch keeper `__dk` (the smallest id
+    * with that hash in the batch) and, for in-batch keepers with at
+    * least `shingleN` tokens, the LSH band keys `__bk` (band b at
+    * position b) and sorted distinct shingle set `__sh` — the values the
+    * index stores for a representative. MinHash runs once per
+    * batch-unique document; the in-batch keeper costs one shuffle on the
+    * hash. */
+  private def deltaSide(delta: DataFrame, idCol: String, textCol: String,
+                        numHashes: Int, rowsPerBand: Int, shingleN: Int): DataFrame = {
     val numBands = numHashes / rowsPerBand
-    val banded = withBandKeys(
-      minhashSignatures(surv, idCol, textCol, numHashes, shingleN),
-      numHashes, rowsPerBand)
-    val dBands = banded.select(col(idCol),
-        explode(array((0 until numBands).map(b =>
-          struct(lit(b).as("band"), col(s"b$b").as("key"))): _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
-    val cand = dBands.join(idxBands, Seq("band", "key"))
-      .select(col(idCol).as("a_id"), col("keeper").as("b_id")).distinct()
-    val joined = cand
-      .join(shingleSets(surv, idCol, textCol, shingleN)
-        .select(col(idCol).as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(idxSh.select(col("keeper").as("b_id"), col("sh").as("b_sh")), "b_id")
-    // distinct verified PAIRS before the per-doc aggregate: duplicate
-    // index shingle rows (crash-replay debris awaiting compaction) must
-    // inflate neither n_near nor anything else
-    val near = jaccardOf(joined).filter(col("jaccard") >= minJaccard)
-      .select("a_id", "b_id").distinct()
-      .groupBy(col("a_id").as(idCol))
-      .agg(min("b_id").as("__nk"), count(lit(1)).as("__nn"))
-    tagged.join(near, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__ck").isNotNull, lit("dup_corpus"))
-          .when(col(idCol) > col("__dk"), lit("dup_delta"))
-          .when(col("__nk").isNotNull, lit("near_corpus"))
-          .otherwise(lit("new")).as("status"),
-        coalesce(col("__ck"),
-          when(col(idCol) > col("__dk"), col("__dk")),
-          col("__nk"), lit(-1L)).as("match_id"),
-        coalesce(col("__nn"), lit(0L)).as("n_near"))
+    val sig = (j: Int) => element_at(col("__sigs"), j + 1)
+    delta.select(col(idCol), col(textCol))
+      .withColumn("__h", md5(col(textCol).cast("binary")))
+      .withColumn("__dk", min(col(idCol)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__h")))
+      // tokens materialized as their own column (see minhashSignatures)
+      .withColumn("__toks", when(col(idCol) === col("__dk"), TextFunctions.tokens(col(textCol))))
+      .withColumn("__shh", when(size(col("__toks")) >= shingleN,
+        org.apache.spark.sql.graft.ShingleHashes(col("__toks"), shingleN)))
+      .withColumn("__sigs", org.apache.spark.sql.graft.MinHashSigs(col("__shh"), numHashes))
+      .select(col(idCol), col("__h"), col("__dk"),
+        when(col("__sigs").isNotNull, array((0 until numBands).map(b =>
+          TextFunctions.bandKey((0 until rowsPerBand).map(r => sig(b * rowsPerBand + r)))): _*))
+          .as("__bk"),
+        array_sort(array_distinct(col("__shh"))).as("__sh"))
+  }
+
+  /** An index table opened without Spark's schema-inference job (the
+    * footer schema of [[SedReader.parquet]]); `None` while the
+    * table holds no parquet file yet. */
+  private def indexTable(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
+      Some(SedReader.parquet(spark, dir))
+    else None
+  }
+
+  /** [[incrementalDedup]]'s classification of a [[deltaSide]] relation
+    * `side` against the index under `path`, keeping `side`'s `__h`,
+    * `__bk` and `__sh` columns for the admit, and whether any index
+    * table was read. Probes: hashes ⋈
+    * broadcast(delta hashes) gives corpus keepers; bands ⋈
+    * broadcast(delta band keys) gives candidate pairs; shingles ⋈
+    * broadcast(candidates) gives each candidate's index shingle set.
+    * Their rows and the delta rows are unioned and partitioned by id
+    * once; windows over each id spread the delta doc's shingle set to
+    * its candidates, verify Jaccard and fold the matches. With
+    * `corpusBelow` (the ingest loop's batch minimum) only keepers below
+    * it are candidates: under the monotone-id contract, band rows at or
+    * above it were left by this very batch's admit before a crash lost
+    * its hashes/ append, and matching them would make the replay differ
+    * from the original classification. */
+  private def classifyAgainst(spark: org.apache.spark.sql.SparkSession, side: DataFrame,
+                              idCol: String, path: String, minJaccard: Double,
+                              corpusBelow: Option[Long] = None): (DataFrame, Boolean) = {
+    val id = col(idCol)
+    val idType = side.schema(idCol).dataType
+    val exact = indexTable(spark, s"$path/hashes").map(_
+      .select(col("content_hash").as("__h"), col("keeper").as("__ck"))
+      .join(broadcast(side.select(col("__h"), id)), "__h")
+      .select(id, col("__ck")))
+    val near = for {
+      bands <- indexTable(spark, s"$path/bands")
+      shingles <- indexTable(spark, s"$path/shingles")
+    } yield {
+      val cand = bands.select(col("band"), col("key"), col("keeper").as("__b"))
+        .join(broadcast(side.filter(col("__bk").isNotNull)
+          .select(id, posexplode(col("__bk")).as(Seq("band", "key")))), Seq("band", "key"))
+        .filter(corpusBelow.fold(lit(true))(col("__b") < _))
+        .select(id, col("__b"))
+      shingles.select(col("keeper").as("__b"), col("sh").as("__bsh"))
+        .join(broadcast(cand), "__b")
+        .select(id, col("__b"), col("__bsh"))
+    }
+    val probes = exact.toSeq ++ near
+    val resolved =
+      if (probes.isEmpty)
+        side.withColumn("__ck", lit(null).cast(idType))
+          .withColumn("__nk", lit(null).cast(idType))
+          .withColumn("__nn", lit(null).cast("long"))
+      else {
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
+        probes.foldLeft(side.withColumn("__m", lit(true))
+            .withColumn("__ck", lit(null).cast(idType))
+            .withColumn("__b", lit(null).cast(idType))
+            .withColumn("__bsh", lit(null).cast("array<bigint>")))(
+            _.unionByName(_, allowMissingColumns = true))
+          .withColumn("__ash", first(col("__sh"), ignoreNulls = true).over(w))
+          .withColumn("__inter", org.apache.spark.sql.graft.SortedIntersectCount(
+            col("__ash"), col("__bsh")))
+          // the same double division as jaccardOf
+          .withColumn("__ok", col("__inter").cast("double") /
+            (size(col("__ash")) + size(col("__bsh")) - col("__inter")).cast("double") >= minJaccard)
+          .withColumns(Map(
+            "__ck" -> min(col("__ck")).over(w),
+            "__nk" -> min(when(col("__ok"), col("__b"))).over(w),
+            "__nn" -> size(collect_set(when(col("__ok"), col("__b"))).over(w)).cast("long")))
+          .filter(col("__m"))
+      }
+    // near matches count only for batch-unique content new to the corpus
+    val isNear = col("__ck").isNull && id === col("__dk") && col("__nn") > 0
+    (resolved.select(id,
+      when(col("__ck").isNotNull, lit("dup_corpus"))
+        .when(id > col("__dk"), lit("dup_delta"))
+        .when(isNear, lit("near_corpus"))
+        .otherwise(lit("new")).as("status"),
+      coalesce(col("__ck"),
+        when(id > col("__dk"), col("__dk")),
+        when(isNear, col("__nk")), lit(-1L)).as("match_id"),
+      when(isNear, col("__nn")).otherwise(lit(0L)).as("n_near"),
+      col("__h"), col("__bk"), col("__sh")), probes.nonEmpty)
   }
 
   /** Admit a classified batch's NEW documents into the persisted index —
@@ -867,19 +948,19 @@ object Dedup {
     requireDistinctPaths(spark, path, destPath)
     // the three table rewrites are independent — overlapped (Par; r17)
     Par.all(
-      () => spark.read.parquet(s"$path/hashes")
+      () => SedReader.parquet(spark, s"$path/hashes")
         .groupBy("content_hash").agg(min("keeper").as("keeper"))
         .write.mode("overwrite").parquet(s"$destPath/hashes"),
       () => {
         // distinct drops crash-replay duplicate rows; distinct KEEPERS for
         // the cap so that debris cannot push a legitimate bucket over it
-        val bands = spark.read.parquet(s"$path/bands").distinct().localCheckpoint(true)
+        val bands = SedReader.parquet(spark, s"$path/bands").distinct().localCheckpoint(true)
         val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
           .filter(col("n") <= maxBucket).select("band", "key")
         bands.join(ok, Seq("band", "key"), "left_semi").repartition(col("key"))
           .write.mode("overwrite").parquet(s"$destPath/bands")
       },
-      () => spark.read.parquet(s"$path/shingles")
+      () => SedReader.parquet(spark, s"$path/shingles")
         .groupBy("keeper").agg(first("sh").as("sh"))
         .write.mode("overwrite").parquet(s"$destPath/shingles"))
     copyIngestMarker(spark, path, destPath)
@@ -984,7 +1065,7 @@ object Dedup {
       val deltaPaths = deltaNames.map(n => new org.apache.hadoop.fs.Path(srcDir, n))
       val deltaBytes = deltaPaths.map(p => fs.getFileStatus(p).getLen).sum
       val foldParts = math.min(512L, deltaBytes / (128L * 1024 * 1024) + 1).toInt
-      fold(spark.read.parquet(deltaPaths.map(_.toString): _*))
+      fold(SedReader.parquetFiles(spark, deltaPaths.map(_.toString)))
         .coalesce(foldParts).write.mode("overwrite").parquet(tmp.toString)
       // part names embed a fresh write-job UUID — never collide with
       // the linked base names
@@ -1032,12 +1113,12 @@ object Dedup {
     val actions = Seq(
       ("hashes", (d: DataFrame) =>
         d.groupBy("content_hash").agg(min("keeper").as("keeper")),
-        () => spark.read.parquet(s"$path/hashes")
+        () => SedReader.parquet(spark, s"$path/hashes")
           .groupBy("content_hash").agg(min("keeper").as("keeper"))
           .write.mode("overwrite").parquet(s"$destPath/hashes")),
       ("bands", (d: DataFrame) => d.distinct(),
         () => {
-          val bands = spark.read.parquet(s"$path/bands").distinct()
+          val bands = SedReader.parquet(spark, s"$path/bands").distinct()
             .localCheckpoint(true)
           val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
             .filter(col("n") <= maxBucket).select("band", "key")
@@ -1047,7 +1128,7 @@ object Dedup {
         }),
       ("shingles", (d: DataFrame) =>
         d.groupBy("keeper").agg(first("sh").as("sh")),
-        () => spark.read.parquet(s"$path/shingles")
+        () => SedReader.parquet(spark, s"$path/shingles")
           .groupBy("keeper").agg(first("sh").as("sh"))
           .write.mode("overwrite").parquet(s"$destPath/shingles"))
     )
@@ -1083,12 +1164,12 @@ object Dedup {
     val manifest = readCompactManifest(fs, path)
     val actions = Seq(
       ("clusters", (d: DataFrame) => d.distinct(),
-        () => spark.read.parquet(s"$path/clusters")
+        () => SedReader.parquet(spark, s"$path/clusters")
           .groupBy("keeper").agg(min("label").as("label"))
           .write.mode("overwrite").parquet(s"$destPath/clusters")),
       ("bands", (d: DataFrame) => d.distinct(),
         () => {
-          val sBands = spark.read.parquet(s"$path/bands").distinct()
+          val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
             .localCheckpoint(true)
           val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
             .filter(col("__n") <= maxBucket).select("band", "key")
@@ -1097,11 +1178,11 @@ object Dedup {
         }),
       ("shingles", (d: DataFrame) =>
         d.groupBy("keeper").agg(first("sh").as("sh")),
-        () => spark.read.parquet(s"$path/shingles")
+        () => SedReader.parquet(spark, s"$path/shingles")
           .groupBy("keeper").agg(first("sh").as("sh"))
           .write.mode("overwrite").parquet(s"$destPath/shingles")),
       ("hashes", (d: DataFrame) => d.distinct(),
-        () => spark.read.parquet(s"$path/hashes").distinct()
+        () => SedReader.parquet(spark, s"$path/hashes").distinct()
           .write.mode("overwrite").parquet(s"$destPath/hashes"))
     )
     // independent per-table moves overlap (see compactDedupIndexDelta)
@@ -1121,8 +1202,8 @@ object Dedup {
   }
 
   /** One classify-and-admit step of the exact-dedup ingestion loop over
-    * a GENERATION-MAINTAINED index root — [[incrementalDedup]] +
-    * [[appendToDedupIndex]] against the ACTIVE generation
+    * a GENERATION-MAINTAINED index root — [[incrementalDedup]]'s
+    * classification and [[appendToDedupIndex]]'s admit against the ACTIVE generation
     * ([[GenIndex.active]]), with the same monotone-id `_ingest_max`
     * guard as the split/chunk families (exact replays of the last batch
     * are admitted and SELF-REPAIR: fully-admitted docs re-classify
@@ -1136,8 +1217,15 @@ object Dedup {
     * swap leaves the previous generation active. Returns the batch's
     * classification (the [[incrementalDedup]] schema), materialized
     * BEFORE the appends so the admit cannot read its own writes.
-    * DedupIngestSpec pins loop == from-scratch classification through
-    * swaps and the crash fixtures. */
+    * The delta is read once: one job materializes its hash, in-batch
+    * keeper, band keys and shingle set and counts the guard's (min, max,
+    * count); the classification probes the index with explicit
+    * broadcasts of that relation, and the admit appends its band keys
+    * and shingle sets: the job count depends only on the data (11 for
+    * a plain batch of perfbench's feed, 6 with no index yet), never on
+    * run-time join choices. DedupIngestSpec pins
+    * loop == from-scratch classification through swaps and the crash
+    * fixtures; DedupIngestJobsSpec the job counts. */
   def dedupIndexIngest(spark: org.apache.spark.sql.SparkSession,
                        delta: DataFrame, idCol: String, textCol: String,
                        root: String, batchId: Long,
@@ -1147,20 +1235,21 @@ object Dedup {
                        onClassified: (DataFrame, Boolean) => Unit = (_, _) => ())
       : DataFrame = {
     val active = GenIndex.active(spark, root)
-    val (ingestMm, isReplay) = checkMonotoneIngest(spark, active, delta, idCol,
-      "hashes", "keeper")
-    // first batch founds the index: an EMPTY build writes the three
-    // tables with their schemas, so the classify below probes an empty
-    // index instead of failing on missing paths
-    val fsRoot = new org.apache.hadoop.fs.Path(active)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fsRoot.exists(new org.apache.hadoop.fs.Path(s"$active/hashes")))
-      buildDedupIndex(delta.limit(0), idCol, textCol, active,
-        numHashes, rowsPerBand, shingleN, maxBucket)
-    val classified = incrementalDedup(spark, delta, idCol, textCol, active,
-      numHashes, rowsPerBand, shingleN, minJaccard)
-      .localCheckpoint(true) // the admit below APPENDS to the tables this plan reads
+    // the delta is read ONCE: its delta side (hash, in-batch keeper, band
+    // keys, shingle set) is materialized, and the same job counts the
+    // guard's (min, max, count) — the guard still runs before any write
+    val (side, ingestMm) = org.apache.spark.sql.graft.LocalMaterialize.withRange(
+      deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN)
+        .withColumn("__idl", col(idCol).cast("long")), "__idl")
+    val isReplay = checkIngestRange(spark, active, ingestMm, "hashes", "keeper")
+    // no index yet: the classification is a projection of `side`, and
+    // the first appends found the tables
+    val (probed, readsIndex) = classifyAgainst(spark, side, idCol, active, minJaccard,
+      ingestMm.map(_._1))
+    // the admit below APPENDS to the tables this plan reads
+    val full = if (readsIndex) probed.localCheckpoint(true) else probed
     ingestMm.foreach(recordIngestMax(spark, active, _))
+    val classified = full.select(col(idCol), col("status"), col("match_id"), col("n_near"))
     // the caller's per-batch outputs go durable HERE — after the replay
     // marker, BEFORE the appends — with the replay flag, so a streaming
     // loop can keep pre-crash output files on detected replays (a replay
@@ -1175,8 +1264,17 @@ object Dedup {
     // nothing, docs whose appends were lost classify `new` again and
     // re-append; duplicate band/shingle debris is absorbed downstream
     // and reclaimed by compaction
-    appendToDedupIndex(delta, classified, idCol, textCol, active,
-      numHashes, rowsPerBand, shingleN)
+    val admit = full.filter(col("status") === "new")
+    // bands/ and shingles/ are independent non-gate appends — overlapped
+    // (Par §2.6; r17); hashes/ still lands strictly after both
+    Par.all(
+      () => admit.select(col(idCol).as("keeper"), posexplode(col("__bk")).as(Seq("band", "key")))
+        .write.mode("append").parquet(s"$active/bands"),
+      () => admit.filter(col("__sh").isNotNull)
+        .select(col(idCol).as("keeper"), col("__sh").as("sh"))
+        .write.mode("append").parquet(s"$active/shingles"))
+    admit.select(col("__h").as("content_hash"), col(idCol).as("keeper"))
+      .write.mode("append").parquet(s"$active/hashes")
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       // in-loop swaps are churn-proportional (round 16): base tiers
       // hard-link, only the files appended since the last swap fold;
@@ -1243,8 +1341,17 @@ object Dedup {
       (Option[(Long, Long, Long)], Boolean) = {
     val mm = delta.agg(min(col(idCol).cast("long")),
       max(col(idCol).cast("long")), count(lit(1))).first()
-    if (mm.isNullAt(0)) return (None, false)
-    val (bMin, bMax, bCnt) = (mm.getLong(0), mm.getLong(1), mm.getLong(2))
+    val range = if (mm.isNullAt(0)) None else Some((mm.getLong(0), mm.getLong(1), mm.getLong(2)))
+    (range, checkIngestRange(spark, path, range, table, ownerCol))
+  }
+
+  /** [[checkMonotoneIngest]]'s check of a batch whose (min, max, count)
+    * is already known; returns whether the batch replays the last one. */
+  private def checkIngestRange(spark: org.apache.spark.sql.SparkSession, path: String,
+                               range: Option[(Long, Long, Long)],
+                               table: String, ownerCol: String): Boolean = {
+    if (range.isEmpty) return false
+    val (bMin, bMax, bCnt) = range.get
     val conf = spark.sparkContext.hadoopConfiguration
     val marker = new org.apache.hadoop.fs.Path(s"$path/_ingest_max")
     val fs = marker.getFileSystem(conf)
@@ -1263,7 +1370,7 @@ object Dedup {
       } else if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$table"))) {
         // pre-guard index: derive the (understated — see docstring)
         // high-water mark once; the marker maintains it exactly after
-        val m = spark.read.parquet(s"$path/$table")
+        val m = SedReader.parquet(spark, s"$path/$table")
           .agg(max(col(ownerCol).cast("long"))).first()
         if (m.isNullAt(0)) None else Some((Long.MinValue, m.getLong(0), None))
       } else None
@@ -1281,7 +1388,7 @@ object Dedup {
           "migrated from a pre-guard index understates ids of " +
           "dup-classified docs)")
     }
-    (Some((bMin, bMax, bCnt)), isReplay)
+    isReplay
   }
 
   /** Persist the batch's (min, max, count) after its appends commit —
@@ -1438,17 +1545,17 @@ object Dedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(s"$path/hashes"))
     val idxHashes =
-      if (hasIndex) spark.read.parquet(s"$path/hashes")
+      if (hasIndex) SedReader.parquet(spark, s"$path/hashes")
       else spark.range(0).select(lit("").as("content_hash"), lit(0L).as("keeper"))
     val idxBands =
-      if (hasIndex) spark.read.parquet(s"$path/bands")
+      if (hasIndex) SedReader.parquet(spark, s"$path/bands")
       else spark.range(0).select(lit(0L).as("keeper"), lit(0).as("band"), lit(0L).as("key"))
     val idxSh =
-      if (hasIndex) spark.read.parquet(s"$path/shingles")
+      if (hasIndex) SedReader.parquet(spark, s"$path/shingles")
       else spark.range(0).select(lit(0L).as("keeper"),
         typedlit(Array.empty[Long]).as("sh"))
     val idxClusters =
-      if (hasIndex) spark.read.parquet(s"$path/clusters")
+      if (hasIndex) SedReader.parquet(spark, s"$path/clusters")
       else spark.range(0).select(lit(0L).as("keeper"), lit(0L).as("label"))
 
     val hashed = delta.select(col(idCol), col(textCol))
@@ -1613,21 +1720,21 @@ object Dedup {
     // overlapped so each rewrite's reduce tail back-fills the next
     // rewrite's scan (Par §2.6; r17)
     Par.all(
-      () => spark.read.parquet(s"$path/clusters")
+      () => SedReader.parquet(spark, s"$path/clusters")
         .groupBy("keeper").agg(min("label").as("label"))
         .write.mode("overwrite").parquet(s"$destPath/clusters"),
       () => {
-        val sBands = spark.read.parquet(s"$path/bands").distinct()
+        val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
           .localCheckpoint(true)
         val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
           .filter(col("__n") <= maxBucket).select("band", "key")
         sBands.join(sOk, Seq("band", "key"), "left_semi")
           .write.mode("overwrite").parquet(s"$destPath/bands")
       },
-      () => spark.read.parquet(s"$path/shingles")
+      () => SedReader.parquet(spark, s"$path/shingles")
         .groupBy("keeper").agg(first("sh").as("sh"))
         .write.mode("overwrite").parquet(s"$destPath/shingles"),
-      () => spark.read.parquet(s"$path/hashes").distinct()
+      () => SedReader.parquet(spark, s"$path/hashes").distinct()
         .write.mode("overwrite").parquet(s"$destPath/hashes"))
     copyIngestMarker(spark, path, destPath)
   }
@@ -1660,7 +1767,7 @@ object Dedup {
                                   epochMin: Long,
                                   maxBucket: Int = 10000): DataFrame = {
     requireDistinctPaths(spark, path, destPath)
-    val cur = spark.read.parquet(s"$path/clusters")
+    val cur = SedReader.parquet(spark, s"$path/clusters")
       .groupBy("keeper").agg(min("label").as("label"))
       .localCheckpoint(true) // feeds retire, keep, and the rewrite
     val tombstones = cur.groupBy("label").agg(max("keeper").as("__mx"))
@@ -1677,7 +1784,7 @@ object Dedup {
       () => keep.select("keeper", "label")
         .write.mode("overwrite").parquet(s"$destPath/clusters"),
       () => {
-        val sBands = spark.read.parquet(s"$path/bands").distinct()
+        val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
           .join(keepKeepers, Seq("keeper"), "left_semi")
           .localCheckpoint(true)
         val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
@@ -1685,11 +1792,11 @@ object Dedup {
         sBands.join(sOk, Seq("band", "key"), "left_semi")
           .write.mode("overwrite").parquet(s"$destPath/bands")
       },
-      () => spark.read.parquet(s"$path/shingles")
+      () => SedReader.parquet(spark, s"$path/shingles")
         .groupBy("keeper").agg(first("sh").as("sh"))
         .join(keepKeepers, Seq("keeper"), "left_semi")
         .write.mode("overwrite").parquet(s"$destPath/shingles"),
-      () => spark.read.parquet(s"$path/hashes").distinct()
+      () => SedReader.parquet(spark, s"$path/hashes").distinct()
         .join(keepKeepers, Seq("keeper"), "left_semi")
         .write.mode("overwrite").parquet(s"$destPath/hashes"))
     copyIngestMarker(spark, path, destPath)
@@ -1716,10 +1823,10 @@ object Dedup {
   def splitIndexAssignment(spark: org.apache.spark.sql.SparkSession,
                            docs: DataFrame, idCol: String, textCol: String,
                            seed: String, path: String): DataFrame = {
-    val cur = spark.read.parquet(s"$path/clusters")
+    val cur = SedReader.parquet(spark, s"$path/clusters")
       .groupBy("keeper").agg(min("label").as("label"))
     docs.select(col(idCol), md5(col(textCol).cast("binary")).as("__h"))
-      .join(spark.read.parquet(s"$path/hashes")
+      .join(SedReader.parquet(spark, s"$path/hashes")
         .select(col("content_hash").as("__h"), col("keeper")), "__h")
       .join(cur, "keeper")
       .select(col(idCol), col("label").as("cluster_label"),
@@ -2202,7 +2309,7 @@ object Dedup {
         explode(org.apache.spark.sql.graft.WinnowedAnchors(col(textCol), k, w)).as("__a"))
       .select(col(idCol), col("__a.pos").as("pos"), col("__a.h").as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxA = spark.read.parquet(s"$path/anchors")
+    val idxA = SedReader.parquet(spark, s"$path/anchors")
     // global earliest per batch-carried hash = min(corpus earliest from
     // the index, batch earliest) — identical to the from-scratch star
     // target over corpus ∪ batch for every hash the batch can pair on
@@ -2228,7 +2335,7 @@ object Dedup {
     val tbs = pairs
       .select(pmod(col("__e_id"), lit(SubstrTextBuckets)).cast("int").as("tb"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val corpusTxt = spark.read.parquet(s"$path/texts")
+    val corpusTxt = SedReader.parquet(spark, s"$path/texts")
       .filter(col("tb").isin(tbs: _*))
       .select(col("id").as("__e_id"), col("text").as("__e_text"))
     // the earlier side of a pair may also be a batch doc (in-batch
@@ -2268,7 +2375,7 @@ object Dedup {
   def appendToSubstringIndex(spark: org.apache.spark.sql.SparkSession,
                              delta: DataFrame, idCol: String, textCol: String,
                              path: String, k: Int = 16, w: Int = 25): Unit = {
-    val idxH = spark.read.parquet(s"$path/anchors").select("h")
+    val idxH = SedReader.parquet(spark, s"$path/anchors").select("h")
     // independent tables — overlapped (Par; r17). Replay in either crash
     // order is absorbed: anchor re-appends anti-join away, duplicate
     // text rows only fan out extension seeds the final distinct
@@ -2292,12 +2399,12 @@ object Dedup {
     requireDistinctPaths(spark, path, destPath)
     // independent table rewrites — overlapped (Par; r17)
     Par.all(
-      () => spark.read.parquet(s"$path/anchors")
+      () => SedReader.parquet(spark, s"$path/anchors")
         .groupBy("h").agg(min(struct(col("e_id"), col("e_pos"))).as("__e"))
         .select(col("h"), col("__e")("e_id").as("e_id"), col("__e")("e_pos").as("e_pos"))
         .write.mode("overwrite").parquet(s"$destPath/anchors"),
       () => writeTextsReadable(spark,
-        spark.read.parquet(s"$path/texts").repartition(col("tb")), destPath))
+        SedReader.parquet(spark, s"$path/texts").repartition(col("tb")), destPath))
   }
 
   /** Write a (possibly empty) `texts/` table so it is ALWAYS readable.
@@ -2346,7 +2453,7 @@ object Dedup {
                                       path: String, destPath: String,
                                       epochMin: Long): DataFrame = {
     requireDistinctPaths(spark, path, destPath)
-    val cur = spark.read.parquet(s"$path/anchors")
+    val cur = SedReader.parquet(spark, s"$path/anchors")
       .groupBy("h").agg(min(struct(col("e_id"), col("e_pos"))).as("__e"))
       .select(col("h"), col("__e")("e_id").as("e_id"), col("__e")("e_pos").as("e_pos"))
       .localCheckpoint(true) // feeds retire AND keep
@@ -2361,7 +2468,7 @@ object Dedup {
       () => cur.filter(col("e_id") >= epochMin)
         .write.mode("overwrite").parquet(s"$destPath/anchors"),
       () => writeTextsReadable(spark,
-        spark.read.parquet(s"$path/texts")
+        SedReader.parquet(spark, s"$path/texts")
           .filter(col("id") >= epochMin)
           .repartition(col("tb")), destPath))
     tombstones
@@ -2402,7 +2509,7 @@ object Dedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(s"$path/chunks"))
     val idx =
-      if (hasIndex) spark.read.parquet(s"$path/chunks")
+      if (hasIndex) SedReader.parquet(spark, s"$path/chunks")
       else spark.range(0).select(lit("").as("ph"), lit(0L).as("owner"))
     val ch = cdcChunks(delta, idCol, textCol, w, div)
       .localCheckpoint(true) // feeds classify AND the append
@@ -2436,7 +2543,7 @@ object Dedup {
   def compactChunkIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, destPath: String): Unit = {
     requireDistinctPaths(spark, path, destPath)
-    spark.read.parquet(s"$path/chunks")
+    SedReader.parquet(spark, s"$path/chunks")
       .groupBy("ph").agg(min("owner").as("owner"))
       .write.mode("overwrite").parquet(s"$destPath/chunks")
     copyIngestMarker(spark, path, destPath)
@@ -2467,7 +2574,7 @@ object Dedup {
     val actions = Seq(
       ("chunks", (d: DataFrame) =>
         d.groupBy("ph").agg(min("owner").as("owner")),
-        () => spark.read.parquet(s"$path/chunks")
+        () => SedReader.parquet(spark, s"$path/chunks")
           .groupBy("ph").agg(min("owner").as("owner"))
           .write.mode("overwrite").parquet(s"$destPath/chunks"))
     ).map { case (t, fold, full) =>
@@ -2508,7 +2615,7 @@ object Dedup {
                                   path: String, destPath: String,
                                   epochMin: Long): DataFrame = {
     requireDistinctPaths(spark, path, destPath)
-    val cur = spark.read.parquet(s"$path/chunks")
+    val cur = SedReader.parquet(spark, s"$path/chunks")
       .groupBy("ph").agg(min("owner").as("owner"))
       .localCheckpoint(true) // feeds retire AND keep
     val tombstones = cur.filter(col("owner") < epochMin)

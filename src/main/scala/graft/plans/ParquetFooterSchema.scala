@@ -4,7 +4,7 @@ package org.apache.spark.sql.graft
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -33,23 +33,39 @@ object ParquetFooterSchema {
       !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
         name.endsWith("._COPYING_"))
 
-  def infer(spark: SparkSession, path: String): Option[StructType] = {
+  def infer(spark: SparkSession, path: String): Option[StructType] =
+    footerSchema(spark, Seq(path), (fs, p) => {
+      val top = fs.getFileStatus(p)
+      if (!top.isDirectory) Some(Seq(top))
+      else {
+        val kids = fs.listStatus(p).toSeq.filter(s => listed(s.getPath.getName))
+        if (kids.exists(_.isDirectory)) None else Some(kids)
+      }
+    })
+
+  /** [[infer]] for `spark.read.parquet(files: _*)` over explicit parquet
+    * FILE paths (Spark's non-merging inference then reads the first of
+    * them in path order); `None` as in [[infer]], and when any path is a
+    * directory. */
+  def inferFiles(spark: SparkSession, files: Seq[String]): Option[StructType] =
+    footerSchema(spark, files, (fs, p) => {
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory) None else Some(Seq(st))
+    })
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String],
+                           list: (FileSystem, Path) => Option[Seq[FileStatus]]): Option[StructType] = {
     val conf = spark.sessionState.conf
-    if (conf.getConfString("spark.sql.parquet.mergeSchema", "false").toBoolean ||
-        path.exists("{}[]*?\\,".contains(_))) return None
+    if (paths.isEmpty || conf.getConfString("spark.sql.parquet.mergeSchema", "false").toBoolean ||
+        paths.exists(_.exists("{}[]*?\\,".contains(_)))) return None
     try {
       val hadoopConf = spark.sessionState.newHadoopConf()
-      val p = new Path(path)
-      val fs = p.getFileSystem(hadoopConf)
-      val top = fs.getFileStatus(p)
-      val files =
-        if (!top.isDirectory) Seq(top)
-        else {
-          val kids = fs.listStatus(p).toSeq.filter(s => listed(s.getPath.getName))
-          if (kids.exists(_.isDirectory)) return None
-          kids
-        }
-      val sorted = files.sortBy(_.getPath.toString)
+      val listings = paths.map { path =>
+        val p = new Path(path)
+        list(p.getFileSystem(hadoopConf), p)
+      }
+      if (listings.exists(_.isEmpty)) return None
+      val sorted = listings.flatten.flatten.sortBy(_.getPath.toString)
       def named(n: String) = sorted.find(_.getPath.getName == n)
       named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
         .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
