@@ -235,45 +235,5 @@ object Bench {
     println(compact)
     chunkLines.foreach(println)
     println(summary)
-    emitAfterSbt(chunkLines :+ summary)
   }
-
-  /** Driver-artifact self-sufficiency (round 10): under a forked sbt run
-    * the `[success] Total time` line is printed by the PARENT sbt JVM
-    * after this JVM exits, so nothing printed here can be the last line
-    * of the driver's captured stdout — round 9's driver artifact had
-    * `parsed: null` because of exactly that trailing line. This spawns a
-    * detached `sh` that re-opens the parent's stdout pipe
-    * (`/proc/<ppid>/fd/1` re-opens the same pipe object on Linux), waits
-    * for the parent to exit — its `[success]` line is flushed by then —
-    * and writes the packed JSON again as the TRUE last bytes of the
-    * driver's stream. The reopen is APPEND mode: when sbt's stdout is a
-    * plain file, `>` would truncate it at offset 0 (measured: the whole
-    * log replaced by a NUL hole); O_APPEND is correct for files and a
-    * no-op flag for pipes/ttys. Bounded 120 s poll; a no-proc or
-    * no-permission environment degrades to a silent no-op (the normal
-    * println above already carried the data). */
-  private def emitAfterSbt(jsonLines: Seq[String]): Unit =
-    try {
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
-      // /proc/self/stat: `pid (comm) state ppid …` — comm may contain
-      // spaces/parens, so parse from the LAST ')'
-      val ppid = stat.substring(stat.lastIndexOf(')') + 2).split(" ")(1)
-      jsonLines.foreach(j =>
-        require(j.indexOf('\'') < 0, "packed JSON must stay shell-single-quote safe"))
-      // r18: re-emit the per-query chunk lines AND the summary, so the
-      // true last bytes of the driver's captured stream are maximally
-      // per-query data (the chunk lines preceding the final summary)
-      // rather than sbt's `[success]` banner
-      val body = jsonLines.map(j => s"printf '%s\\n' '$j'").mkString("\n")
-      val script =
-        s"""exec >>/proc/$ppid/fd/1 2>/dev/null || exit 0
-           |i=0
-           |while [ -e /proc/$ppid ] && [ $$i -lt 600 ]; do sleep 0.2; i=$$((i+1)); done
-           |$body
-           |""".stripMargin
-      new ProcessBuilder("sh", "-c", script).start()
-      ()
-    } catch { case _: Throwable => () }
 }

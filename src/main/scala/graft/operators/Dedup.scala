@@ -716,32 +716,17 @@ object Dedup {
     *    shingle-hash set, so candidate pairs Jaccard-verify against the
     *    index alone — no join back to corpus text.
     * Index size is O(distinct docs), not O(corpus bytes): the shuffle and
-    * the files carry hashes and band keys, never document text. */
+    * the files carry hashes and band keys, never document text. The
+    * representatives are the corpus's in-batch keepers of [[deltaSide]],
+    * written by the ingest loop's own [[writeAdmitted]]. */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
                       path: String,
                       numHashes: Int = 12, rowsPerBand: Int = 3,
-                      shingleN: Int = 3, maxBucket: Int = 10000): Unit = {
-    corpus.groupBy(md5(col(textCol).cast("binary")).as("content_hash"))
-      .agg(min(col(idCol)).as("keeper"))
-      .write.mode("overwrite").parquet(s"$path/hashes")
-    val reps = exactRepresentatives(corpus, idCol, md5(col(textCol).cast("binary")))
-    val numBands = numHashes / rowsPerBand
-    val banded = withBandKeys(
-      minhashSignatures(reps, idCol, textCol, numHashes, shingleN),
-      numHashes, rowsPerBand)
-    val bands = banded.select(col(idCol).as("keeper"),
-        explode(array((0 until numBands).map(b =>
-          struct(lit(b).as("band"), col(s"b$b").as("key"))): _*)).as("bk"))
-      .select(col("keeper"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .localCheckpoint(true) // feeds the guard AND the guarded write once
-    val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket).select("band", "key")
-    bands.join(ok, Seq("band", "key"), "left_semi")
-      .write.mode("overwrite").parquet(s"$path/bands")
-    shingleSets(reps, idCol, textCol, shingleN)
-      .withColumnRenamed(idCol, "keeper")
-      .write.mode("overwrite").parquet(s"$path/shingles")
-  }
+                      shingleN: Int = 3, maxBucket: Int = 10000): Unit =
+    writeAdmitted(deltaSide(corpus, idCol, textCol, numHashes, rowsPerBand, shingleN)
+        .filter(col(idCol) === col("__dk"))
+        .localCheckpoint(true), // feeds all three writes
+      idCol, path, "overwrite", capBuckets(_, maxBucket))
 
   /** Dedup an arriving delta batch against a [[buildDedupIndex]] index
     * plus itself — the realistic ingestion shape at corpus scale, where
@@ -909,32 +894,43 @@ object Dedup {
   def appendToDedupIndex(delta: DataFrame, classified: DataFrame,
                          idCol: String, textCol: String, path: String,
                          numHashes: Int = 12, rowsPerBand: Int = 3,
-                         shingleN: Int = 3): Unit = {
-    val admit = delta.join(
-      classified.filter(col("status") === "new").select(idCol), Seq(idCol), "left_semi")
-      .localCheckpoint(true) // feeds three appends; hashes/ LAST is the gate
-    val numBands = numHashes / rowsPerBand
-    // bands/ and shingles/ are independent non-gate appends — overlapped
-    // (Par §2.6; r17); hashes/ still lands strictly after both
+                         shingleN: Int = 3): Unit =
+    writeAdmitted(deltaSide(delta.join(
+        classified.filter(col("status") === "new").select(idCol), Seq(idCol), "left_semi"),
+        idCol, textCol, numHashes, rowsPerBand, shingleN)
+        .localCheckpoint(true), // feeds three appends; hashes/ LAST is the gate
+      idCol, path, "append")
+
+  /** Write [[deltaSide]] rows — each its batch's keeper — into the dedup
+    * index tables under `path`: band keys (through `capBands`) and
+    * shingle sets, overlapped (Par §2.6; r17), then the content hashes
+    * strictly after both. hashes/ is the gate that decides future
+    * status, so a crash between the writes replays the whole admit
+    * identically (the doc still classifies `new`); the duplicate
+    * band/shingle rows that re-append are absorbed by the candidate
+    * distinct / the verify's pair distinct and reclaimed by compaction. */
+  private def writeAdmitted(admit: DataFrame, idCol: String, path: String, mode: String,
+                            capBands: DataFrame => DataFrame = identity): Unit = {
     Par.all(
-      () => withBandKeys(minhashSignatures(admit, idCol, textCol, numHashes, shingleN),
-          numHashes, rowsPerBand)
-        .select(col(idCol).as("keeper"),
-          explode(array((0 until numBands).map(b =>
-            struct(lit(b).as("band"), col(s"b$b").as("key"))): _*)).as("bk"))
-        .select(col("keeper"), col("bk.band").as("band"), col("bk.key").as("key"))
-        .write.mode("append").parquet(s"$path/bands"),
-      () => shingleSets(admit, idCol, textCol, shingleN)
-        .withColumnRenamed(idCol, "keeper")
-        .write.mode("append").parquet(s"$path/shingles"))
-    // hashes/ LAST: it is the gate that decides future status, so a crash
-    // between the appends replays the whole admit identically (the doc
-    // still classifies `new`); the duplicate band/shingle rows that
-    // re-append are absorbed by the candidate distinct / the verify's
-    // pair distinct and reclaimed by [[compactDedupIndex]]
-    admit.select(md5(col(textCol).cast("binary")).as("content_hash"),
-        col(idCol).as("keeper"))
-      .write.mode("append").parquet(s"$path/hashes")
+      () => capBands(admit.select(col(idCol).as("keeper"),
+          posexplode(col("__bk")).as(Seq("band", "key"))))
+        .write.mode(mode).parquet(s"$path/bands"),
+      () => admit.filter(col("__sh").isNotNull)
+        .select(col(idCol).as("keeper"), col("__sh").as("sh"))
+        .write.mode(mode).parquet(s"$path/shingles"))
+    admit.select(col("__h").as("content_hash"), col(idCol).as("keeper"))
+      .write.mode(mode).parquet(s"$path/hashes")
+  }
+
+  /** The LSH skew guard on a band table: buckets (band, key) holding
+    * more than `maxBucket` rows are dropped — degenerate boilerplate
+    * belongs to the exact-hash pass, and a hot key would fan every
+    * future probe out against the whole bucket. `bands` is materialized
+    * once; it feeds both the count and the semi-join. */
+  private def capBuckets(bands: DataFrame, maxBucket: Int): DataFrame = {
+    val b = bands.localCheckpoint(true)
+    b.join(b.groupBy("band", "key").agg(count(lit(1)).as("__n"))
+      .filter(col("__n") <= maxBucket).select("band", "key"), Seq("band", "key"), "left_semi")
   }
 
   /** Rewrite a dedup index compactly: coalesce the append-accumulated
@@ -944,27 +940,8 @@ object Dedup {
     * batch. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, destPath: String,
-                        maxBucket: Int = 10000): Unit = {
-    requireDistinctPaths(spark, path, destPath)
-    // the three table rewrites are independent — overlapped (Par; r17)
-    Par.all(
-      () => SedReader.parquet(spark, s"$path/hashes")
-        .groupBy("content_hash").agg(min("keeper").as("keeper"))
-        .write.mode("overwrite").parquet(s"$destPath/hashes"),
-      () => {
-        // distinct drops crash-replay duplicate rows; distinct KEEPERS for
-        // the cap so that debris cannot push a legitimate bucket over it
-        val bands = SedReader.parquet(spark, s"$path/bands").distinct().localCheckpoint(true)
-        val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
-          .filter(col("n") <= maxBucket).select("band", "key")
-        bands.join(ok, Seq("band", "key"), "left_semi").repartition(col("key"))
-          .write.mode("overwrite").parquet(s"$destPath/bands")
-      },
-      () => SedReader.parquet(spark, s"$path/shingles")
-        .groupBy("keeper").agg(first("sh").as("sh"))
-        .write.mode("overwrite").parquet(s"$destPath/shingles"))
-    copyIngestMarker(spark, path, destPath)
-  }
+                        maxBucket: Int = 10000): Unit =
+    compactTables(spark, path, destPath, dedupTables(maxBucket))
 
   // ---------------------------------------------------------------------
   // Churn-proportional (LSM delta) compaction for the LSH index families
@@ -1079,9 +1056,114 @@ object Dedup {
     }
   }
 
+  /** One table of a table-list index family, for [[compactTables]]:
+    * `fold` collapses one delta tier's crash-replay debris (replays
+    * re-append within one swap interval, so duplicates never straddle
+    * the base/delta boundary); `rewrite(src, restrict)` is the table's
+    * whole semantic rewrite, applying a retention horizon's `restrict`
+    * at the point where it is sound for that table. */
+  private[operators] final case class IndexTable(
+      name: String, fold: DataFrame => DataFrame,
+      rewrite: (DataFrame, DataFrame => DataFrame) => DataFrame)
+
+  /** A table whose whole rewrite is its delta fold, restricted last. */
+  private def folded(name: String, fold: DataFrame => DataFrame): IndexTable =
+    IndexTable(name, fold, (src, restrict) => restrict(fold(src)))
+
+  private def minBy(key: String, v: String): DataFrame => DataFrame =
+    _.groupBy(key).agg(min(v).as(v))
+
+  private val oneShingleSet: DataFrame => DataFrame =
+    _.groupBy("keeper").agg(first("sh").as("sh"))
+
+  /** The exact+near dedup index ([[buildDedupIndex]]): hashes resolve to
+    * the min keeper, shingles keep one set per keeper, and bands drop
+    * replay duplicates before the bucket cap, so debris cannot push a
+    * legitimate bucket over it. */
+  private[operators] def dedupTables(maxBucket: Int): Seq[IndexTable] = Seq(
+    folded("hashes", minBy("content_hash", "keeper")),
+    IndexTable("bands", _.distinct(), (src, restrict) =>
+      capBuckets(restrict(src.distinct()), maxBucket).repartition(col("key"))),
+    folded("shingles", oneShingleSet))
+
+  /** The split index ([[splitIndexIngest]]). The clusters label history
+    * delta-folds by a plain distinct (the read path min-resolves labels,
+    * so stale base rows are inert until a whole rewrite collapses each
+    * rep to its min label); it is the table a retention horizon is
+    * decided on. Bands are capped AFTER the horizon's restriction, so
+    * retired rows cannot push a kept bucket over the cap. */
+  private[operators] def splitTables(maxBucket: Int): Seq[IndexTable] = Seq(
+    IndexTable("clusters", _.distinct(),
+      (src, restrict) => restrict(minBy("keeper", "label")(src))),
+    IndexTable("bands", _.distinct(), (src, restrict) =>
+      capBuckets(restrict(src.distinct()), maxBucket)),
+    folded("shingles", oneShingleSet),
+    folded("hashes", _.distinct()))
+
+  /** The chunk index ([[incrementalCdcDedup]]): one (ph, owner) table,
+    * resolved to each hash's min owner — min is associative and the read
+    * path min-resolves owners across tiers, so the delta tier folds
+    * alone. */
+  private[operators] val chunkTables: Seq[IndexTable] = Seq(folded("chunks", minBy("ph", "owner")))
+
+  /** A retention horizon decided on a family's first table: the
+    * tombstones (materialized before any write, so they survive the
+    * source generation's GC), that table's kept rows, and the
+    * restriction every other table's rewrite applies. */
+  private[operators] final case class Retired(tombstones: DataFrame, kept: DataFrame,
+                                              restrict: DataFrame => DataFrame)
+
+  /** The one compaction routine of the dedup, split and chunk families:
+    * moves every table of `tables` from `path` to `destPath`, then
+    * writes the delta manifest (delta form only) and carries the
+    * `_ingest_max` marker. The per-table moves are independent (distinct
+    * src/dest dirs, manifest written after ALL) and overlap, so one
+    * table's rewrite tail back-fills the others' (Par §2.6; r17).
+    *  - whole form (no `fullRewriteOver`, no `retire`): every table's
+    *    `rewrite`, one shuffle per table, sized by the index;
+    *  - delta form (`fullRewriteOver`): churn-proportional
+    *    [[moveTableDelta]] with that tier budget, escalating to the
+    *    table's `rewrite`;
+    *  - retention form (`retire`): the first table's rewrite is
+    *    materialized and `retire` decides the horizon on it; that table
+    *    writes the kept rows, every other table its rewrite restricted.
+    * Returns (table → action) and a retention's tombstones.
+    * `afterMove(table)` runs after each table's move. */
+  private[operators] def compactTables(spark: org.apache.spark.sql.SparkSession,
+      path: String, destPath: String, tables: Seq[IndexTable],
+      fullRewriteOver: Option[Int] = None,
+      retire: Option[DataFrame => Retired] = None,
+      afterMove: String => Unit = _ => ()): (Map[String, String], Option[DataFrame]) = {
+    requireDistinctPaths(spark, path, destPath)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def src(t: IndexTable) = SedReader.parquet(spark, s"$path/${t.name}")
+    val retired = retire.map(
+      _(tables.head.rewrite(src(tables.head), identity).localCheckpoint(true)))
+    val manifest = fullRewriteOver.map(over => (over, readCompactManifest(fs, path)))
+    val moved = Par.run(tables.map { t => () =>
+      val full = () => retired.fold(t.rewrite(src(t), identity))(r =>
+          if (t eq tables.head) r.kept else t.rewrite(src(t), r.restrict))
+        .write.mode("overwrite").parquet(s"$destPath/${t.name}")
+      val move = manifest match {
+        case Some((over, m)) =>
+          moveTableDelta(spark, path, destPath, t.name, m.getOrElse(t.name, Set.empty),
+            m.getOrElse(s"${t.name}#tiers", Set.empty).headOption.map(_.toInt).getOrElse(0),
+            over, t.fold, full)
+        case None => full(); ("full", Seq.empty[String], 0)
+      }
+      afterMove(t.name)
+      t.name -> move
+    })
+    manifest.foreach(_ => writeCompactManifest(fs, destPath, moved.flatMap {
+      case (t, (_, files, tiers)) => Seq(t -> files, s"$t#tiers" -> Seq(tiers.toString))
+    }.toMap))
+    copyIngestMarker(spark, path, destPath)
+    (moved.map { case (t, (act, _, _)) => t -> act }.toMap, retired.map(_.tombstones))
+  }
+
   /** CHURN-PROPORTIONAL compaction for the exact+near dedup index — the
-    * LSH-family answer to [[Ann.compactIvfIndexPerBucket]] (VERDICT r15
-    * task: "per-bucket compaction for the band tables"). The IVF
+    * LSH-family answer to [[Ann.compactIvfIndexPerBucket]]. The IVF
     * template (link quiet bucket DIRS) does NOT transfer: band keys are
     * minhashes, so appends HASH-SPREAD across the key space and every
     * key-partition would be busy every swap — for LSH tables the churn
@@ -1089,66 +1171,24 @@ object Dedup {
     * each table's files recorded by the last compaction (the manifest)
     * are its BASE tier and move by hard link (O(metadata), never a
     * Spark job); files appended since are the DELTA tier, folded alone
-    * (within-delta debris distinct — crash replays re-append within one
-    * swap interval, so duplicates never straddle the boundary) and
-    * landed as one fresh file, O(churn). A table whose tier count
+    * and landed as fresh file(s), O(churn). A table whose tier count
     * exceeds `fullRewriteOver` escalates to [[compactDedupIndex]]'s
     * whole rewrite for that table (re-applying the band bucket cap),
     * which re-bases the manifest — classic tiered compaction, amortized
     * O(corpus/fullRewriteOver) per swap. Readers are invariant to the
-    * deferral by construction: the candidate distinct absorbs linked
-    * debris, the probe cap is applied at classify time
-    * (countDistinct per matched (band, key)), and min-resolution folds
-    * label/owner history — the same contracts that make APPENDS safe.
+    * deferral by the same contracts that make APPENDS safe: duplicate
+    * band rows only repeat a candidate, which the verify fold counts
+    * once; min-resolution folds keeper history. The bucket cap is NOT
+    * re-applied between whole rewrites — [[incrementalDedup]] probes
+    * uncapped, so an over-cap bucket only costs extra verify candidates
+    * (Jaccard still gates) until the next whole rewrite drops it.
     * Zero-churn swap = pure links + a manifest write. Returns
-    * (table → action) for receipts; BandCompactBench prices it. */
+    * (table → action) for receipts. */
   def compactDedupIndexDelta(spark: org.apache.spark.sql.SparkSession,
                              path: String, destPath: String,
                              maxBucket: Int = 10000,
-                             fullRewriteOver: Int = 16): Map[String, String] = {
-    requireDistinctPaths(spark, path, destPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val manifest = readCompactManifest(fs, path)
-    val actions = Seq(
-      ("hashes", (d: DataFrame) =>
-        d.groupBy("content_hash").agg(min("keeper").as("keeper")),
-        () => SedReader.parquet(spark, s"$path/hashes")
-          .groupBy("content_hash").agg(min("keeper").as("keeper"))
-          .write.mode("overwrite").parquet(s"$destPath/hashes")),
-      ("bands", (d: DataFrame) => d.distinct(),
-        () => {
-          val bands = SedReader.parquet(spark, s"$path/bands").distinct()
-            .localCheckpoint(true)
-          val ok = bands.groupBy("band", "key").agg(count(lit(1)).as("n"))
-            .filter(col("n") <= maxBucket).select("band", "key")
-          bands.join(ok, Seq("band", "key"), "left_semi")
-            .repartition(col("key"))
-            .write.mode("overwrite").parquet(s"$destPath/bands")
-        }),
-      ("shingles", (d: DataFrame) =>
-        d.groupBy("keeper").agg(first("sh").as("sh")),
-        () => SedReader.parquet(spark, s"$path/shingles")
-          .groupBy("keeper").agg(first("sh").as("sh"))
-          .write.mode("overwrite").parquet(s"$destPath/shingles"))
-    )
-    // per-table moves are independent (distinct src/dest dirs, manifest
-    // written after ALL) — overlap them so one table's fold/rewrite tail
-    // back-fills the others' (Par §2.6; r17)
-    val moved = Par.run(actions.map { case (t, fold, full) => () =>
-      val (act, files, tiers) = moveTableDelta(spark, path, destPath, t,
-        manifest.getOrElse(t, Set.empty),
-        manifest.getOrElse(s"$t#tiers", Set.empty)
-          .headOption.map(_.toInt).getOrElse(0),
-        fullRewriteOver, fold, full)
-      (t, act, files, tiers)
-    })
-    writeCompactManifest(fs, destPath,
-      moved.flatMap { case (t, _, f, tiers) =>
-        Seq(t -> f, s"$t#tiers" -> Seq(tiers.toString)) }.toMap)
-    copyIngestMarker(spark, path, destPath)
-    moved.map { case (t, a, _, _) => t -> a }.toMap
-  }
+                             fullRewriteOver: Int = 16): Map[String, String] =
+    compactTables(spark, path, destPath, dedupTables(maxBucket), Some(fullRewriteOver))._1
 
   /** [[compactDedupIndexDelta]] for the SPLIT index (adds the clusters
     * label-history table, whose delta fold is a plain distinct — the
@@ -1157,49 +1197,8 @@ object Dedup {
   def compactSplitIndexDelta(spark: org.apache.spark.sql.SparkSession,
                              path: String, destPath: String,
                              maxBucket: Int = 10000,
-                             fullRewriteOver: Int = 16): Map[String, String] = {
-    requireDistinctPaths(spark, path, destPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val manifest = readCompactManifest(fs, path)
-    val actions = Seq(
-      ("clusters", (d: DataFrame) => d.distinct(),
-        () => SedReader.parquet(spark, s"$path/clusters")
-          .groupBy("keeper").agg(min("label").as("label"))
-          .write.mode("overwrite").parquet(s"$destPath/clusters")),
-      ("bands", (d: DataFrame) => d.distinct(),
-        () => {
-          val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
-            .localCheckpoint(true)
-          val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
-            .filter(col("__n") <= maxBucket).select("band", "key")
-          sBands.join(sOk, Seq("band", "key"), "left_semi")
-            .write.mode("overwrite").parquet(s"$destPath/bands")
-        }),
-      ("shingles", (d: DataFrame) =>
-        d.groupBy("keeper").agg(first("sh").as("sh")),
-        () => SedReader.parquet(spark, s"$path/shingles")
-          .groupBy("keeper").agg(first("sh").as("sh"))
-          .write.mode("overwrite").parquet(s"$destPath/shingles")),
-      ("hashes", (d: DataFrame) => d.distinct(),
-        () => SedReader.parquet(spark, s"$path/hashes").distinct()
-          .write.mode("overwrite").parquet(s"$destPath/hashes"))
-    )
-    // independent per-table moves overlap (see compactDedupIndexDelta)
-    val moved = Par.run(actions.map { case (t, fold, full) => () =>
-      val (act, files, tiers) = moveTableDelta(spark, path, destPath, t,
-        manifest.getOrElse(t, Set.empty),
-        manifest.getOrElse(s"$t#tiers", Set.empty)
-          .headOption.map(_.toInt).getOrElse(0),
-        fullRewriteOver, fold, full)
-      (t, act, files, tiers)
-    })
-    writeCompactManifest(fs, destPath,
-      moved.flatMap { case (t, _, f, tiers) =>
-        Seq(t -> f, s"$t#tiers" -> Seq(tiers.toString)) }.toMap)
-    copyIngestMarker(spark, path, destPath)
-    moved.map { case (t, a, _, _) => t -> a }.toMap
-  }
+                             fullRewriteOver: Int = 16): Map[String, String] =
+    compactTables(spark, path, destPath, splitTables(maxBucket), Some(fullRewriteOver))._1
 
   /** One classify-and-admit step of the exact-dedup ingestion loop over
     * a GENERATION-MAINTAINED index root — [[incrementalDedup]]'s
@@ -1211,10 +1210,11 @@ object Dedup {
     * docs whose appends a crash lost classify `new` again and
     * re-append — hashes/ is written last as the gate), and —
     * every `compactEvery` batches — in-loop compaction through a
-    * crash-safe generation swap ([[GenIndex.compact]] of
-    * [[compactDedupIndex]]): file counts stay bounded over long feeds,
-    * the band bucket cap is re-applied, and a crash at ANY point of the
-    * swap leaves the previous generation active. Returns the batch's
+    * crash-safe generation swap ([[GenIndex.maintain]] of
+    * [[compactDedupIndexDelta]]): file counts stay bounded over long
+    * feeds, the band bucket cap is re-applied whenever a table is
+    * rewritten whole, and a crash at ANY point of the swap leaves the
+    * previous generation active. Returns the batch's
     * classification (the [[incrementalDedup]] schema), materialized
     * BEFORE the appends so the admit cannot read its own writes.
     * The delta is read once: one job materializes its hash, in-batch
@@ -1264,26 +1264,13 @@ object Dedup {
     // nothing, docs whose appends were lost classify `new` again and
     // re-append; duplicate band/shingle debris is absorbed downstream
     // and reclaimed by compaction
-    val admit = full.filter(col("status") === "new")
-    // bands/ and shingles/ are independent non-gate appends — overlapped
-    // (Par §2.6; r17); hashes/ still lands strictly after both
-    Par.all(
-      () => admit.select(col(idCol).as("keeper"), posexplode(col("__bk")).as(Seq("band", "key")))
-        .write.mode("append").parquet(s"$active/bands"),
-      () => admit.filter(col("__sh").isNotNull)
-        .select(col(idCol).as("keeper"), col("__sh").as("sh"))
-        .write.mode("append").parquet(s"$active/shingles"))
-    admit.select(col("__h").as("content_hash"), col(idCol).as("keeper"))
-      .write.mode("append").parquet(s"$active/hashes")
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-      // in-loop swaps are churn-proportional (round 16): base tiers
-      // hard-link, only the files appended since the last swap fold;
-      // the whole rewrite still runs when tier count crosses the
-      // escalation threshold (and on the first, manifest-less swap)
-      GenIndex.compact(spark, root)((src, dest) =>
-        compactDedupIndexDelta(spark, src, dest, maxBucket))
-      ()
-    }
+    writeAdmitted(full.filter(col("status") === "new"), idCol, active, "append")
+    // in-loop swaps are churn-proportional (round 16): base tiers
+    // hard-link, only the files appended since the last swap fold; the
+    // whole rewrite still runs when tier count crosses the escalation
+    // threshold (and on the first, manifest-less swap)
+    GenIndex.maintain(spark, root, batchId, compactEvery)(
+      compactDedupIndexDelta(spark, _, _, maxBucket))
     classified
   }
 
@@ -1714,30 +1701,8 @@ object Dedup {
     * monotone-ingestion guard survives compaction. */
   def compactSplitIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, destPath: String,
-                        maxBucket: Int = 10000): Unit = {
-    requireDistinctPaths(spark, path, destPath)
-    // the four table rewrites are independent (distinct src/dest) —
-    // overlapped so each rewrite's reduce tail back-fills the next
-    // rewrite's scan (Par §2.6; r17)
-    Par.all(
-      () => SedReader.parquet(spark, s"$path/clusters")
-        .groupBy("keeper").agg(min("label").as("label"))
-        .write.mode("overwrite").parquet(s"$destPath/clusters"),
-      () => {
-        val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
-          .localCheckpoint(true)
-        val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucket).select("band", "key")
-        sBands.join(sOk, Seq("band", "key"), "left_semi")
-          .write.mode("overwrite").parquet(s"$destPath/bands")
-      },
-      () => SedReader.parquet(spark, s"$path/shingles")
-        .groupBy("keeper").agg(first("sh").as("sh"))
-        .write.mode("overwrite").parquet(s"$destPath/shingles"),
-      () => SedReader.parquet(spark, s"$path/hashes").distinct()
-        .write.mode("overwrite").parquet(s"$destPath/hashes"))
-    copyIngestMarker(spark, path, destPath)
-  }
+                        maxBucket: Int = 10000): Unit =
+    compactTables(spark, path, destPath, splitTables(maxBucket))
 
   /** [[compactSplitIndex]] with a RETENTION horizon — the GDPR/TTL story
     * for the at-ingest split: clusters whose ENTIRE recorded history
@@ -1765,43 +1730,18 @@ object Dedup {
   def compactSplitIndexDropBefore(spark: org.apache.spark.sql.SparkSession,
                                   path: String, destPath: String,
                                   epochMin: Long,
-                                  maxBucket: Int = 10000): DataFrame = {
-    requireDistinctPaths(spark, path, destPath)
-    val cur = SedReader.parquet(spark, s"$path/clusters")
-      .groupBy("keeper").agg(min("label").as("label"))
-      .localCheckpoint(true) // feeds retire, keep, and the rewrite
-    val tombstones = cur.groupBy("label").agg(max("keeper").as("__mx"))
-      .filter(col("__mx") < epochMin)
-      .select(col("label").as("old_label"))
-      .localCheckpoint(true) // survives the source generation's GC
-    val keep = cur.join(
-        tombstones.withColumnRenamed("old_label", "label"), Seq("label"), "left_anti")
-      .localCheckpoint(true)
-    val keepKeepers = keep.select("keeper")
-    // keep/ tombstones are materialized (localCheckpoint) — the four
-    // retained-table rewrites are independent and overlap (Par; r17)
-    Par.all(
-      () => keep.select("keeper", "label")
-        .write.mode("overwrite").parquet(s"$destPath/clusters"),
-      () => {
-        val sBands = SedReader.parquet(spark, s"$path/bands").distinct()
-          .join(keepKeepers, Seq("keeper"), "left_semi")
-          .localCheckpoint(true)
-        val sOk = sBands.groupBy("band", "key").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucket).select("band", "key")
-        sBands.join(sOk, Seq("band", "key"), "left_semi")
-          .write.mode("overwrite").parquet(s"$destPath/bands")
-      },
-      () => SedReader.parquet(spark, s"$path/shingles")
-        .groupBy("keeper").agg(first("sh").as("sh"))
-        .join(keepKeepers, Seq("keeper"), "left_semi")
-        .write.mode("overwrite").parquet(s"$destPath/shingles"),
-      () => SedReader.parquet(spark, s"$path/hashes").distinct()
-        .join(keepKeepers, Seq("keeper"), "left_semi")
-        .write.mode("overwrite").parquet(s"$destPath/hashes"))
-    copyIngestMarker(spark, path, destPath)
-    tombstones
-  }
+                                  maxBucket: Int = 10000): DataFrame =
+    compactTables(spark, path, destPath, splitTables(maxBucket), retire = Some { cur =>
+      val tombstones = cur.groupBy("label").agg(max("keeper").as("__mx"))
+        .filter(col("__mx") < epochMin)
+        .select(col("label").as("old_label"))
+        .localCheckpoint(true)
+      val keep = cur.join(
+          tombstones.withColumnRenamed("old_label", "label"), Seq("label"), "left_anti")
+        .localCheckpoint(true)
+      Retired(tombstones, keep.select("keeper", "label"),
+        _.join(keep.select("keeper"), Seq("keeper"), "left_semi"))
+    })._2.get
 
   /** Carry the `_ingest_max` monotonicity marker from a compacted index
     * to its destination (the guard would otherwise fall back to a
@@ -2541,13 +2481,8 @@ object Dedup {
     * crash-replay duplicate owner rows to the min owner). Index-sized,
     * maintenance cadence. */
   def compactChunkIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String, destPath: String): Unit = {
-    requireDistinctPaths(spark, path, destPath)
-    SedReader.parquet(spark, s"$path/chunks")
-      .groupBy("ph").agg(min("owner").as("owner"))
-      .write.mode("overwrite").parquet(s"$destPath/chunks")
-    copyIngestMarker(spark, path, destPath)
-  }
+                        path: String, destPath: String): Unit =
+    compactTables(spark, path, destPath, chunkTables)
 
   /** [[compactDedupIndexDelta]] for the CHUNK index — closing the last
     * whole-rewrite index family (§8 r16): the single `chunks/`
@@ -2566,31 +2501,8 @@ object Dedup {
     * band families. Returns (table → action) for receipts. */
   def compactChunkIndexDelta(spark: org.apache.spark.sql.SparkSession,
                              path: String, destPath: String,
-                             fullRewriteOver: Int = 16): Map[String, String] = {
-    requireDistinctPaths(spark, path, destPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val manifest = readCompactManifest(fs, path)
-    val actions = Seq(
-      ("chunks", (d: DataFrame) =>
-        d.groupBy("ph").agg(min("owner").as("owner")),
-        () => SedReader.parquet(spark, s"$path/chunks")
-          .groupBy("ph").agg(min("owner").as("owner"))
-          .write.mode("overwrite").parquet(s"$destPath/chunks"))
-    ).map { case (t, fold, full) =>
-      val (act, files, tiers) = moveTableDelta(spark, path, destPath, t,
-        manifest.getOrElse(t, Set.empty),
-        manifest.getOrElse(s"$t#tiers", Set.empty)
-          .headOption.map(_.toInt).getOrElse(0),
-        fullRewriteOver, fold, full)
-      (t, act, files, tiers)
-    }
-    writeCompactManifest(fs, destPath,
-      actions.flatMap { case (t, _, f, tiers) =>
-        Seq(t -> f, s"$t#tiers" -> Seq(tiers.toString)) }.toMap)
-    copyIngestMarker(spark, path, destPath)
-    actions.map { case (t, a, _, _) => t -> a }.toMap
-  }
+                             fullRewriteOver: Int = 16): Map[String, String] =
+    compactTables(spark, path, destPath, chunkTables, Some(fullRewriteOver))._1
 
   /** [[compactChunkIndex]] with a RETENTION horizon — the GDPR/TTL story
     * for the chunk family (round 15, the split family's
@@ -2613,18 +2525,10 @@ object Dedup {
     * against forgotten content (ChunkSubstrRetentionSpec pins both). */
   def compactChunkIndexDropBefore(spark: org.apache.spark.sql.SparkSession,
                                   path: String, destPath: String,
-                                  epochMin: Long): DataFrame = {
-    requireDistinctPaths(spark, path, destPath)
-    val cur = SedReader.parquet(spark, s"$path/chunks")
-      .groupBy("ph").agg(min("owner").as("owner"))
-      .localCheckpoint(true) // feeds retire AND keep
-    val tombstones = cur.filter(col("owner") < epochMin)
-      .localCheckpoint(true) // survives the source generation's GC
-    cur.filter(col("owner") >= epochMin)
-      .write.mode("overwrite").parquet(s"$destPath/chunks")
-    copyIngestMarker(spark, path, destPath)
-    tombstones
-  }
+                                  epochMin: Long): DataFrame =
+    compactTables(spark, path, destPath, chunkTables, retire = Some(cur => Retired(
+      cur.filter(col("owner") < epochMin).localCheckpoint(true),
+      cur.filter(col("owner") >= epochMin), identity)))._2.get
 
   /** Paragraph-level exact dedup (the Dolma/CCNet granularity between
     * whole-document exact dedup and n-gram span trims): documents split

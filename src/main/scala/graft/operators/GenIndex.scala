@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe GENERATION SWAP for the persisted incremental indexes
   * (split / chunk / substring / dedup / IVF): in-loop compaction must
@@ -130,4 +130,33 @@ object GenIndex {
     else fs.delete(new Path(src), true)
     dest
   }
+
+  /** A retention form for [[maintain]]: when `horizon(batchId)` is above
+    * Long.MinValue, that batch's swap runs `dropBefore(src, dest,
+    * horizon)` instead of the plain compaction, and the tombstones it
+    * returns go durable under `${outPath}_tombstones/batch=<id>` BEFORE
+    * the swap commits — a crash in between leaves the previous
+    * generation active and the tombstone files unread, and a consumer
+    * reads tombstones only for batches whose swap committed. */
+  final case class Retention(horizon: Long => Long,
+                             dropBefore: (String, String, Long) => DataFrame,
+                             outPath: String)
+
+  /** The in-loop maintenance step of the streaming index loops: on every
+    * `every`-th batch (`every` > 0, `batchId` counting from 0) [[compact]]
+    * `root` with `compactFn`, or with `retention`'s drop-before form when
+    * that batch has a horizon. */
+  def maintain(spark: SparkSession, root: String, batchId: Long, every: Int,
+               retention: Option[Retention] = None)
+              (compactFn: (String, String) => Unit): Unit =
+    if (every > 0 && (batchId + 1) % every == 0) {
+      val dropping = retention.map(r => r -> r.horizon(batchId)).filter(_._2 != Long.MinValue)
+      compact(spark, root) { (src, dest) =>
+        dropping.fold(compactFn(src, dest)) { case (r, horizon) =>
+          r.dropBefore(src, dest, horizon).write.mode("overwrite")
+            .parquet(s"${r.outPath}_tombstones/batch=$batchId")
+        }
+      }
+      ()
+    }
 }

@@ -817,9 +817,10 @@ object Multimodal {
 
   /** ASYMMETRIC multiprobe Hamming LOOKUP — query-batch-vs-corpus, the
     * INDEX shape where multiprobe finally wins (round 16; the SELF-join
-    * A/B in SketchAB measured it losing there — candidate volume
-    * dominates a near-dup-heavy self-join — so [[hammingEdgesSketch]]
-    * keeps probe 0 and THIS operator carries the probe): the corpus
+    * A/B receipt in SURVEY.md §2, MULTIPROBE entry, measured it losing
+    * there — candidate volume dominates a near-dup-heavy self-join —
+    * so [[hammingEdgesSketch]] keeps probe 0 and THIS operator carries
+    * the probe): the corpus
     * emits exactly ONE row per (table, key) per hash — no variants ever
     * ride the big side — while each query emits its key's FULL
     * ≤`probe`-flip ball (1 + s + C(s,2) = 56 variants at s = 10,
@@ -831,7 +832,8 @@ object Multimodal {
     * at radius 18 / 0.95 recall the corpus shuffles 6 rows per hash
     * instead of probe-0's 110 — an 18× cut of the dominant (corpus
     * emission) term that the variant ball never touches, because it
-    * multiplies only the |Q|-sized side (LookupAB receipts the win).
+    * multiplies only the |Q|-sized side (receipt: SURVEY.md §2,
+    * `q_image_query` entry).
     * Degenerate corpus buckets over `maxBucket` TRUE population drop
     * (same guard semantics as the self-join). Everything returned is an
     * exact verified pair, and the emitted set is a pure function of
@@ -884,9 +886,10 @@ object Multimodal {
     * batch pays a full index scan + aggregate before the probe.
     * `broadcastQueries` broadcasts the |Q|·tables·ball variant relation
     * so the CORPUS side never shuffles — the asymmetric shape this
-    * operator exists for (round-17 LookupAB receipt: the unbroadcast
-    * plan shuffled the full 4M×t-row index per batch, and the planner
-    * cannot know the derived ball is small); pass false only when the
+    * operator exists for (round-17 receipt, SURVEY.md §2
+    * `q_image_query_wide` entry: the unbroadcast plan shuffled the full
+    * 4M×t-row index per batch, and the planner cannot know the derived
+    * ball is small); pass false only when the
     * query batch itself is too large to broadcast (|Q|·tables·ball
     * rows), and chunk the batch instead at scale. */
   private def lookupJoin(corpusKeyed: DataFrame, queries: DataFrame,
@@ -940,7 +943,8 @@ object Multimodal {
     * recall / radius 18) writes, stores, and — at query time — SCANS
     * 18× less than probe-0's 110 tables. At 100 TB the index artifact
     * IS the cost of this shape (build I/O, disk, per-query scan);
-    * LookupAB receipts bytes + build + indexed-query wall side by side.
+    * SURVEY.md §2 (`q_image_query` entry) receipts bytes + build +
+    * indexed-query wall side by side.
     * Layout: parquet (id, ph, t, key0) exchanged once on (t, key0) so
     * each bucket lands contiguously; readers re-shuffle only the tiny
     * query side. */
@@ -1013,7 +1017,8 @@ object Multimodal {
       else if (maxHamming <= 15)
         hammingEdgesWide(reps, "doc_id", "phash", maxHamming, preSpread = false)
       else
-        // probe-0 sketch, 110 tables — MEASURED choice (SketchAB, round
+        // probe-0 sketch, 110 tables — MEASURED choice (SURVEY.md §2
+        // MULTIPROBE entry, round
         // 15, real 10× rep set: probe0/t110 5.5 s, probe1/t18 7.3 s,
         // probe2/t6 11 s warm): multiprobe cuts t·n emission but
         // inflates the bucket self-join by v_a·v_b/p-lift (≈7.8× at

@@ -3557,9 +3557,10 @@ object PipelineQueries {
     // (Multimodal.sketchRecall; HammingSketchSpec gates planted recall
     // >= 0.95 and per-pair exactness). MULTIPROBE (round 15) stays a
     // library alternative — probe = 1|2 + sketchTablesForMultiprobe cut
-    // the table count 6x/18x at equal recall — but the SketchAB A/B on
-    // the real 10x rep set measured it SLOWER here (5.5 vs 7.3 vs 11 s
-    // for probe 0/1/2): near-dup image corpora concentrate key mass, so
+    // the table count 6x/18x at equal recall — but the A/B on the real
+    // 10x rep set (SURVEY.md §2 MULTIPROBE entry) measured it SLOWER
+    // here (5.5 vs 7.3 vs 11 s for probe 0/1/2): near-dup image corpora
+    // concentrate key mass, so
     // the bucket self-join's v_a·v_b variant inflation outweighs the
     // t·n emission saving. The entry keeps the measured winner.
     "q_image_clusters_sketch" -> QueryDef(
@@ -3617,9 +3618,9 @@ object PipelineQueries {
     // sketchTablesForMultiprobe(18, 10, 0.95, 2) = 6 tables, and each
     // query emits its key's ≤2-flip ball (56 variants) on the small
     // side only — at equal 0.95 recall the INDEX ARTIFACT is the win
-    // (LookupAB on the 10× rep set: 11.4× fewer bytes, 3× faster build,
+    // (SURVEY.md §2, 10× rep set: 11.4× fewer bytes, 3× faster build,
     // indexed-query wall 1.07 vs 1.35 s against probe-0's 110 tables);
-    // the inline self-join keeps probe 0 where SketchAB measured
+    // the inline self-join keeps probe 0 where the self-join A/B measured
     // candidates dominating. ORACLE-GREEN: collision is EXACTLY
     // bit_count(xor & table_mask) <= 2 over the 6 inlined position
     // masks, corpus-side maxBucket guard replayed structurally like
@@ -3676,8 +3677,9 @@ object PipelineQueries {
     // WIDE-KEY variant of the asymmetric lookup (round 17, §8 item 2):
     // same persisted-index probe at bits = 14 — 2^14 = 16,384 buckets
     // per table instead of 2^10 = 1,024, the corpus-scale dial that
-    // cuts random-collision candidate tails 16× (LookupAB wide mode
-    // receipts the crossover at a 4M-hash corpus; at THIS fixture scale
+    // cuts random-collision candidate tails 16× (SURVEY.md §2
+    // `q_image_query_wide` entry receipts the crossover at a 4M-hash
+    // corpus; at THIS fixture scale
     // the two widths are equivalent and the entry certifies the wide
     // key path's exactness under the driver oracle). t =
     // sketchTablesForMultiprobe(18, 14, 0.95, 2) = 17 tables at the

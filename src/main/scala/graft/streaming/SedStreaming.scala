@@ -495,19 +495,10 @@ object SedStreaming {
           graft.operators.Dedup.buildSubstringIndex(
             delta, idCol, textCol, active, k, w)
         }
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          val horizon = retention(batchId)
-          graft.operators.GenIndex.compact(s, indexPath) { (src, dest) =>
-            if (horizon == Long.MinValue)
-              graft.operators.Dedup.compactSubstringIndex(s, src, dest)
-            else
-              graft.operators.Dedup.compactSubstringIndexDropBefore(
-                  s, src, dest, horizon)
-                .write.mode("overwrite")
-                .parquet(s"${outPath}_tombstones/batch=$batchId")
-          }
-          ()
-        }
+        graft.operators.GenIndex.maintain(s, indexPath, batchId, compactEvery,
+          Some(graft.operators.GenIndex.Retention(retention,
+            graft.operators.Dedup.compactSubstringIndexDropBefore(s, _, _, _), outPath)))(
+          graft.operators.Dedup.compactSubstringIndex(s, _, _))
       }
       .option("checkpointLocation", ckPath)
       .start()
@@ -585,30 +576,15 @@ object SedStreaming {
         writeUnlessReplayed(r.corrections,
           s"${outPath}_corrections/batch=$batchId")
         r.commit()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // retention(batchId) > MinValue turns this compaction into a
-          // dropBefore: clusters wholly older than the horizon retire,
-          // and their TOMBSTONES go durable under _tombstones/batch=<id>
-          // BEFORE the swap commits (a crash in between leaves the
-          // previous generation active and the tombstone files unread —
-          // the consumer contract reads tombstones only for batches
-          // whose compaction committed, which resolving the active
-          // generation makes observable)
-          val horizon = retention(batchId)
-          graft.operators.GenIndex.compact(s, indexPath) { (src, dest) =>
-            if (horizon == Long.MinValue)
-              // churn-proportional: base tiers link, delta tier folds
-              // (round 16); retention swaps stay whole-rewrite — a
-              // horizon filter must visit every row anyway
-              graft.operators.Dedup.compactSplitIndexDelta(s, src, dest, maxBucket)
-            else
-              graft.operators.Dedup.compactSplitIndexDropBefore(
-                  s, src, dest, horizon, maxBucket)
-                .write.mode("overwrite")
-                .parquet(s"${outPath}_tombstones/batch=$batchId")
-          }
-          ()
-        }
+        // retention(batchId) > MinValue turns the swap into a dropBefore:
+        // clusters wholly older than the horizon retire and their
+        // tombstones go durable first. Plain swaps are churn-proportional
+        // (base tiers link, the delta tier folds — round 16); retention
+        // swaps stay whole-rewrite — a horizon filter must visit every row
+        graft.operators.GenIndex.maintain(s, indexPath, batchId, compactEvery,
+          Some(graft.operators.GenIndex.Retention(retention,
+            graft.operators.Dedup.compactSplitIndexDropBefore(s, _, _, _, maxBucket), outPath)))(
+          graft.operators.Dedup.compactSplitIndexDelta(s, _, _, maxBucket))
       }
       .option("checkpointLocation", ckPath)
       .start()
@@ -644,14 +620,9 @@ object SedStreaming {
             org.apache.spark.sql.functions.col("n_frames")), Seq("doc_id"))
           .select("doc_id", "n_frames", "n_chunks", "n_dup_chunks", "dup_chars")
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // LSM-style: base tier links, delta folds O(churn)
-          graft.operators.GenIndex.compact(s, indexPath) { (src, dest) =>
-            graft.operators.Dedup.compactChunkIndexDelta(s, src, dest)
-            ()
-          }
-        ()
-        }
+        // LSM-style: base tier links, delta folds O(churn)
+        graft.operators.GenIndex.maintain(s, indexPath, batchId, compactEvery)(
+          graft.operators.Dedup.compactChunkIndexDelta(s, _, _))
       }
       .option("checkpointLocation", ckPath)
       .start()
@@ -682,22 +653,10 @@ object SedStreaming {
         graft.operators.Dedup.incrementalCdcDedup(
             s, b.toDF(), idCol, textCol, active, w, div)
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          val horizon = retention(batchId)
-          graft.operators.GenIndex.compact(s, indexPath) { (src, dest) =>
-            if (horizon == Long.MinValue) {
-              // LSM-style: base tier links, delta folds O(churn)
-              graft.operators.Dedup.compactChunkIndexDelta(s, src, dest)
-              ()
-            }
-            else
-              graft.operators.Dedup.compactChunkIndexDropBefore(
-                  s, src, dest, horizon)
-                .write.mode("overwrite")
-                .parquet(s"${outPath}_tombstones/batch=$batchId")
-          }
-          ()
-        }
+        graft.operators.GenIndex.maintain(s, indexPath, batchId, compactEvery,
+          Some(graft.operators.GenIndex.Retention(retention,
+            graft.operators.Dedup.compactChunkIndexDropBefore(s, _, _, _), outPath)))(
+          graft.operators.Dedup.compactChunkIndexDelta(s, _, _))
       }
       .option("checkpointLocation", ckPath)
       .start()
@@ -775,19 +734,14 @@ object SedStreaming {
         graft.operators.Ann.appendToIvfIndex(
           graft.operators.Ann.loadIvfIndex(s, active), b.toDF(), idCol, vecCol,
           antiJoinExisting)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // CHURN-PROPORTIONAL swap (round 15): only buckets over
-          // `rewriteFilesOver` part files rewrite; quiet buckets
-          // hard-link/copy into the new generation without a Spark job,
-          // so in-loop maintenance costs what the feed touched since
-          // the last swap, not the index size
-          graft.operators.GenIndex.compact(s, indexRoot)((src, dest) => {
-            graft.operators.Ann.compactIvfIndexPerBucket(
-              s, graft.operators.Ann.loadIvfIndex(s, src), dest, rewriteFilesOver)
-            ()
-          })
-          ()
-        }
+        // CHURN-PROPORTIONAL swap (round 15): only buckets over
+        // `rewriteFilesOver` part files rewrite; quiet buckets
+        // hard-link/copy into the new generation without a Spark job,
+        // so in-loop maintenance costs what the feed touched since the
+        // last swap, not the index size
+        graft.operators.GenIndex.maintain(s, indexRoot, batchId, compactEvery)((src, dest) =>
+          graft.operators.Ann.compactIvfIndexPerBucket(
+            s, graft.operators.Ann.loadIvfIndex(s, src), dest, rewriteFilesOver))
       }
       .option("checkpointLocation", ckPath)
       .start()
