@@ -1071,13 +1071,17 @@ object Ann {
       .drop("__dup", "__r")
   }
 
-  /** Broadcast ceiling for [[knnGraph]]'s vector-attach joins: below this
-    * corpus size the (id, vec) table rides an explicit broadcast
-    * (≈ 8 + 4·dim bytes/row → ~0.6 GB built relation at 2M rows/64 dims,
-    * comfortably under the 8 GB / 512M-row broadcast cap), so the
-    * candidate relations are scored map-side; above it the id-keyed
-    * shuffled joins return unchanged. */
-  private[operators] val MaxKnnBroadcastRows = 2000000L
+  /** Broadcast budget for [[knnGraph]]'s vector-attach joins, in bytes of
+    * (id, vec) payload: a corpus of `n` vectors of `dim` floats fits when
+    * n·(8 + 4·dim) is within it (2M rows of 64 dims, 528 MB, still do;
+    * the per-row norm and the hash relation's overhead stay far under
+    * Spark's 8 GB broadcast cap). A fitting table rides an explicit
+    * broadcast, so the candidate relations are scored map-side; above
+    * it the id-keyed shuffled joins return unchanged. */
+  private[operators] val MaxKnnBroadcastBytes = 512L << 20
+
+  private[operators] def knnBroadcastFits(n: Long, dim: Int): Boolean =
+    n * (8L + 4L * dim) <= MaxKnnBroadcastBytes
 
   /** Approximate k-NN GRAPH over the whole corpus — NN-Descent (Dong,
     * Moses & Li, WWW 2011 "Efficient K-Nearest Neighbor Graph
@@ -1109,7 +1113,11 @@ object Ann {
     require(k >= 1 && iters >= 0)
     val vecs = corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .localCheckpoint(true)
-    val n = vecs.count()
+    // the row count and the widest vector, in one job
+    val (n, dim) = {
+      val r = vecs.agg(count(lit(1)), max(size(col("v")))).first()
+      (r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1))
+    }
     // NN-Descent's convergence rides on graph CONNECTIVITY, which small
     // k starves (with k = 4 the shared-pivot discovery probability per
     // pair per iteration drops below ~50% and stragglers persist for
@@ -1120,8 +1128,8 @@ object Ann {
     // r18 (guide §3.1/§8): candidate pairs are decided on SKINNY
     // (src, dst) rows and the (8 + 4·dim)-byte vector payload is attached
     // only at scoring time, via a broadcast of the checkpointed vector
-    // table when it provably fits (n is exact here — the planner cannot
-    // see it through the checkpoint). Before this, every iteration's
+    // table when it provably fits (n and dim are exact here — the planner cannot
+    // see them through the checkpoint). Before this, every iteration's
     // scoring joins shuffled the candidate relation twice — the second
     // time carrying the attached src vector payload — and the init
     // bucket join shuffled the payload ×3 groupings. Map-side scoring
@@ -1140,7 +1148,7 @@ object Ann {
       val dv = vecs.select(col("id").as("dst"), col("v").as("__dv"),
         normc(col("v")).as("__dn"))
       val (s1, d1) =
-        if (n <= MaxKnnBroadcastRows) (broadcast(sv), broadcast(dv))
+        if (knnBroadcastFits(n, dim)) (broadcast(sv), broadcast(dv))
         else (sv, dv)
       pairs.join(s1, "src").join(d1, "dst")
         .select(col("src"), col("dst"),

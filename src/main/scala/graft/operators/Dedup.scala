@@ -722,11 +722,13 @@ object Dedup {
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
                       path: String,
                       numHashes: Int = 12, rowsPerBand: Int = 3,
-                      shingleN: Int = 3, maxBucket: Int = 10000): Unit =
-    writeAdmitted(deltaSide(corpus, idCol, textCol, numHashes, rowsPerBand, shingleN)
-        .filter(col(idCol) === col("__dk"))
-        .localCheckpoint(true), // feeds all three writes
-      idCol, path, "overwrite", capBuckets(_, maxBucket))
+                      shingleN: Int = 3, maxBucket: Int = 10000): Unit = {
+    val admit = deltaSide(corpus, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
+      .filter(col(idCol) === col("__dk"))
+      .localCheckpoint(true) // feeds all three writes
+    writeAdmitted(admit, idCol, path, "overwrite",
+      capBuckets(_, plannedPartitions(admit), maxBucket))
+  }
 
   /** Dedup an arriving delta batch against a [[buildDedupIndex]] index
     * plus itself — the realistic ingestion shape at corpus scale, where
@@ -759,7 +761,8 @@ object Dedup {
                        path: String,
                        numHashes: Int = 12, rowsPerBand: Int = 3,
                        shingleN: Int = 3, minJaccard: Double = 0.8): DataFrame =
-    classifyAgainst(spark, deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN),
+    classifyAgainst(spark,
+        deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = false),
         idCol, path, minJaccard)._1
       .select(col(idCol), col("status"), col("match_id"), col("n_near"))
 
@@ -770,13 +773,17 @@ object Dedup {
     * position b) and sorted distinct shingle set `__sh` — the values the
     * index stores for a representative. MinHash runs once per
     * batch-unique document; the in-batch keeper costs one shuffle on the
-    * hash. */
+    * hash. A caller that materializes the side (`sized`) gets that
+    * shuffle as wide as `delta` is read ([[plannedPartitions]]); without
+    * it the planner places the shuffle, so a read of `__h` and the id
+    * alone (the exact probe of [[incrementalDedup]]) prunes it away. */
   private def deltaSide(delta: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int, rowsPerBand: Int, shingleN: Int): DataFrame = {
+                        numHashes: Int, rowsPerBand: Int, shingleN: Int,
+                        sized: Boolean): DataFrame = {
     val numBands = numHashes / rowsPerBand
     val sig = (j: Int) => element_at(col("__sigs"), j + 1)
-    delta.select(col(idCol), col(textCol))
-      .withColumn("__h", md5(col(textCol).cast("binary")))
+    val hashed = delta.select(col(idCol), col(textCol), md5(col(textCol).cast("binary")).as("__h"))
+    (if (sized) hashed.repartition(plannedPartitions(delta), col("__h")) else hashed)
       .withColumn("__dk", min(col(idCol)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__h")))
       // tokens materialized as their own column (see minhashSignatures)
@@ -789,6 +796,23 @@ object Dedup {
           TextFunctions.bandKey((0 until rowsPerBand).map(r => sig(b * rowsPerBand + r)))): _*))
           .as("__bk"),
         array_sort(array_distinct(col("__shh"))).as("__sh"))
+  }
+
+  /** The partition count `df` is planned with, found without running a
+    * job: an exchange's width, a file scan's split count, an existing
+    * RDD's partitions; a union sums its children, and any other operator
+    * keeps its child's. It sizes a shuffle that runs once per input. */
+  private[operators] def plannedPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, SparkPlan, UnionExec}
+    def of(p: SparkPlan): Int = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => of(a.initialPlan)
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case l: LeafExecNode => l.execute().getNumPartitions
+      case u: UnionExec => u.children.map(of).sum
+      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+      case _ => p.children.map(of).max
+    }
+    math.max(1, of(df.queryExecution.executedPlan))
   }
 
   /** An index table opened without Spark's schema-inference job (the
@@ -811,8 +835,9 @@ object Dedup {
     * broadcast(delta band keys) gives candidate pairs; shingles ⋈
     * broadcast(candidates) gives each candidate's index shingle set.
     * Their rows and the delta rows are unioned and partitioned by id
-    * once; windows over each id spread the delta doc's shingle set to
-    * its candidates, verify Jaccard and fold the matches. With
+    * once, as wide as `side` ([[plannedPartitions]]); windows over each
+    * id spread the delta doc's shingle set to its candidates, verify
+    * Jaccard and fold the matches. With
     * `corpusBelow` (the ingest loop's batch minimum) only keepers below
     * it are candidates: under the monotone-id contract, band rows at or
     * above it were left by this very batch's admit before a crash lost
@@ -843,26 +868,25 @@ object Dedup {
     val probes = exact.toSeq ++ near
     val resolved =
       if (probes.isEmpty)
-        side.withColumn("__ck", lit(null).cast(idType))
-          .withColumn("__nk", lit(null).cast(idType))
-          .withColumn("__nn", lit(null).cast("long"))
+        side.select(col("*"), lit(null).cast(idType).as("__ck"),
+          lit(null).cast(idType).as("__nk"), lit(null).cast("long").as("__nn"))
       else {
         val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
-        probes.foldLeft(side.withColumn("__m", lit(true))
-            .withColumn("__ck", lit(null).cast(idType))
-            .withColumn("__b", lit(null).cast(idType))
-            .withColumn("__bsh", lit(null).cast("array<bigint>")))(
+        val spread = probes.foldLeft(side.select(col("*"), lit(true).as("__m"),
+            lit(null).cast(idType).as("__ck"), lit(null).cast(idType).as("__b"),
+            lit(null).cast("array<bigint>").as("__bsh")))(
             _.unionByName(_, allowMissingColumns = true))
-          .withColumn("__ash", first(col("__sh"), ignoreNulls = true).over(w))
-          .withColumn("__inter", org.apache.spark.sql.graft.SortedIntersectCount(
-            col("__ash"), col("__bsh")))
-          // the same double division as jaccardOf
-          .withColumn("__ok", col("__inter").cast("double") /
-            (size(col("__ash")) + size(col("__bsh")) - col("__inter")).cast("double") >= minJaccard)
-          .withColumns(Map(
-            "__ck" -> min(col("__ck")).over(w),
-            "__nk" -> min(when(col("__ok"), col("__b"))).over(w),
-            "__nn" -> size(collect_set(when(col("__ok"), col("__b"))).over(w)).cast("long")))
+          // the one shuffle on the id, as wide as the delta side
+          .repartition(plannedPartitions(side), id)
+          .select(col("*"), first(col("__sh"), ignoreNulls = true).over(w).as("__ash"))
+        val inter = org.apache.spark.sql.graft.SortedIntersectCount(col("__ash"), col("__bsh"))
+        // the same double division as jaccardOf
+        val ok = inter.cast("double") /
+          (size(col("__ash")) + size(col("__bsh")) - inter).cast("double") >= minJaccard
+        spread.select(side.columns.map(col).toSeq ++ Seq(col("__m"),
+            min(col("__ck")).over(w).as("__ck"),
+            min(when(ok, col("__b"))).over(w).as("__nk"),
+            size(collect_set(when(ok, col("__b"))).over(w)).cast("long").as("__nn")): _*)
           .filter(col("__m"))
       }
     // near matches count only for batch-unique content new to the corpus
@@ -897,7 +921,7 @@ object Dedup {
                          shingleN: Int = 3): Unit =
     writeAdmitted(deltaSide(delta.join(
         classified.filter(col("status") === "new").select(idCol), Seq(idCol), "left_semi"),
-        idCol, textCol, numHashes, rowsPerBand, shingleN)
+        idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
         .localCheckpoint(true), // feeds three appends; hashes/ LAST is the gate
       idCol, path, "append")
 
@@ -922,22 +946,23 @@ object Dedup {
       .write.mode(mode).parquet(s"$path/hashes")
   }
 
-  /** The LSH skew guard on a band table: buckets (band, key) holding
-    * more than `maxBucket` rows are dropped — degenerate boilerplate
-    * belongs to the exact-hash pass, and a hot key would fan every
-    * future probe out against the whole bucket. `bands` is materialized
-    * once; it feeds both the count and the semi-join. */
-  private def capBuckets(bands: DataFrame, maxBucket: Int): DataFrame = {
-    val b = bands.localCheckpoint(true)
-    b.join(b.groupBy("band", "key").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucket).select("band", "key"), Seq("band", "key"), "left_semi")
-  }
+  /** The LSH skew guard on a band table, in one shuffle: the rows are
+    * hash-partitioned `n` ways on (band, key), replay duplicates drop,
+    * and buckets (band, key) then holding more than `maxBucket` rows are
+    * dropped by a window count over the same partitioning — degenerate
+    * boilerplate belongs to the exact-hash pass, and a hot key would fan
+    * every future probe out against the whole bucket. */
+  private def capBuckets(bands: DataFrame, n: Int, maxBucket: Int): DataFrame =
+    distinctOn("band", "key")(bands, n)
+      .withColumn("__n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "key")))
+      .filter(col("__n") <= maxBucket).drop("__n")
 
   /** Rewrite a dedup index compactly: coalesce the append-accumulated
     * small files and re-apply the band bucket cap (appends admit rows
     * uncapped — see [[appendToDedupIndex]]). One shuffle per table,
-    * sized by the index, run at maintenance cadence — never per
-    * batch. */
+    * sized by the table's bytes ([[partsForBytes]]), run at maintenance
+    * cadence — never per batch. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, destPath: String,
                         maxBucket: Int = 10000): Unit =
@@ -951,13 +976,19 @@ object Dedup {
     * next swap's quiet/busy oracle. JSON {table: [names...]}. */
   private val CompactManifest = "_compacted_files.json"
 
+  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).filter(st => st.isFile && st.getPath.getName.startsWith("part-")).toSeq
+
   private def partFilesOf(fs: org.apache.hadoop.fs.FileSystem,
                           dir: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).collect {
-      case st if st.isFile && st.getPath.getName.startsWith("part-") =>
-        st.getPath.getName
-    }.toSeq.sorted
+    partFiles(fs, dir).map(_.getPath.getName).sorted
+
+  /** The shuffle width of a compaction over `bytes` of index files, and
+    * so the number of files it lands: one per ~128 MB, at most 512. */
+  private[operators] def partsForBytes(bytes: Long): Int =
+    math.min(512L, bytes / (128L * 1024 * 1024) + 1).toInt
 
   private def readCompactManifest(fs: org.apache.hadoop.fs.FileSystem,
                                   path: String): Map[String, Set[String]] = {
@@ -1001,7 +1032,7 @@ object Dedup {
                              path: String, destPath: String, table: String,
                              base: Set[String], tiers: Int,
                              fullRewriteOver: Int,
-                             fold: DataFrame => DataFrame,
+                             fold: Sized,
                              full: () => Unit): (String, Seq[String], Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val srcDir = new org.apache.hadoop.fs.Path(s"$path/$table")
@@ -1032,18 +1063,17 @@ object Dedup {
         new org.apache.hadoop.fs.Path(srcDir, n),
         new org.apache.hadoop.fs.Path(destDir, n), conf))
       // fold the delta tier alone and land it as fresh part file(s):
-      // the fold's partition count is sized from the delta tier's
-      // BYTES (target ~128 MB/file, capped) — a fixed coalesce(1)
-      // would single-thread a large inter-swap append and grow one
+      // the fold's shuffle is sized from the delta tier's BYTES — one
+      // partition, so one file, per ~128 MB (capped) — a fixed width of
+      // one would single-thread a large inter-swap append and grow one
       // unbounded file (only tier COUNT, not size, triggers the full
       // rewrite). Small deltas still land as one file.
       val tmp = new org.apache.hadoop.fs.Path(
         s"$destPath/.${table}_delta_tmp")
       val deltaPaths = deltaNames.map(n => new org.apache.hadoop.fs.Path(srcDir, n))
-      val deltaBytes = deltaPaths.map(p => fs.getFileStatus(p).getLen).sum
-      val foldParts = math.min(512L, deltaBytes / (128L * 1024 * 1024) + 1).toInt
-      fold(SedReader.parquetFiles(spark, deltaPaths.map(_.toString)))
-        .coalesce(foldParts).write.mode("overwrite").parquet(tmp.toString)
+      fold(SedReader.parquetFiles(spark, deltaPaths.map(_.toString)),
+          partsForBytes(deltaPaths.map(p => fs.getFileStatus(p).getLen).sum))
+        .write.mode("overwrite").parquet(tmp.toString)
       // part names embed a fresh write-job UUID — never collide with
       // the linked base names
       val renamed = partFilesOf(fs, tmp).map { n =>
@@ -1056,49 +1086,64 @@ object Dedup {
     }
   }
 
+  /** A transform of an index table whose one shuffle is `n` partitions
+    * wide — [[partsForBytes]] of the bytes it reads. */
+  private type Sized = (DataFrame, Int) => DataFrame
+
   /** One table of a table-list index family, for [[compactTables]]:
     * `fold` collapses one delta tier's crash-replay debris (replays
     * re-append within one swap interval, so duplicates never straddle
-    * the base/delta boundary); `rewrite(src, restrict)` is the table's
-    * whole semantic rewrite, applying a retention horizon's `restrict`
-    * at the point where it is sound for that table. */
+    * the base/delta boundary); `rewrite(src, n, restrict)` is the
+    * table's whole semantic rewrite, `n` partitions wide, applying a
+    * retention horizon's `restrict` at the point where it is sound for
+    * that table. */
   private[operators] final case class IndexTable(
-      name: String, fold: DataFrame => DataFrame,
-      rewrite: (DataFrame, DataFrame => DataFrame) => DataFrame)
+      name: String, fold: Sized,
+      rewrite: (DataFrame, Int, DataFrame => DataFrame) => DataFrame)
 
   /** A table whose whole rewrite is its delta fold, restricted last. */
-  private def folded(name: String, fold: DataFrame => DataFrame): IndexTable =
-    IndexTable(name, fold, (src, restrict) => restrict(fold(src)))
+  private def folded(name: String, fold: Sized): IndexTable =
+    IndexTable(name, fold, (src, n, restrict) => restrict(fold(src, n)))
 
-  private def minBy(key: String, v: String): DataFrame => DataFrame =
-    _.groupBy(key).agg(min(v).as(v))
+  /** Distinct rows, hash-partitioned on `keys` — a grouping on a superset
+    * of the partitioning keys needs no second exchange. */
+  private def distinctOn(keys: String*): Sized =
+    (df, n) => df.repartition(n, keys.map(col): _*).distinct()
 
-  private val oneShingleSet: DataFrame => DataFrame =
-    _.groupBy("keeper").agg(first("sh").as("sh"))
+  private def minBy(key: String, v: String): Sized =
+    (df, n) => df.repartition(n, col(key)).groupBy(key).agg(min(v).as(v))
+
+  private val oneShingleSet: Sized =
+    (df, n) => df.repartition(n, col("keeper")).groupBy("keeper").agg(first("sh").as("sh"))
+
+  /** A band table: replay duplicates fold within a delta tier; the whole
+    * rewrite restricts first, then drops duplicates and applies the
+    * bucket cap in one shuffle, so neither debris nor retired rows can
+    * push a kept bucket over the cap. */
+  private def bandTable(maxBucket: Int): IndexTable =
+    IndexTable("bands", distinctOn("band", "key"),
+      (src, n, restrict) => capBuckets(restrict(src), n, maxBucket))
 
   /** The exact+near dedup index ([[buildDedupIndex]]): hashes resolve to
-    * the min keeper, shingles keep one set per keeper, and bands drop
-    * replay duplicates before the bucket cap, so debris cannot push a
-    * legitimate bucket over it. */
+    * the min keeper, shingles keep one set per keeper, and bands are
+    * capped ([[bandTable]]). */
   private[operators] def dedupTables(maxBucket: Int): Seq[IndexTable] = Seq(
     folded("hashes", minBy("content_hash", "keeper")),
-    IndexTable("bands", _.distinct(), (src, restrict) =>
-      capBuckets(restrict(src.distinct()), maxBucket).repartition(col("key"))),
+    bandTable(maxBucket),
     folded("shingles", oneShingleSet))
 
   /** The split index ([[splitIndexIngest]]). The clusters label history
     * delta-folds by a plain distinct (the read path min-resolves labels,
     * so stale base rows are inert until a whole rewrite collapses each
     * rep to its min label); it is the table a retention horizon is
-    * decided on. Bands are capped AFTER the horizon's restriction, so
-    * retired rows cannot push a kept bucket over the cap. */
+    * decided on. Bands are capped AFTER the horizon's restriction
+    * ([[bandTable]]). */
   private[operators] def splitTables(maxBucket: Int): Seq[IndexTable] = Seq(
-    IndexTable("clusters", _.distinct(),
-      (src, restrict) => restrict(minBy("keeper", "label")(src))),
-    IndexTable("bands", _.distinct(), (src, restrict) =>
-      capBuckets(restrict(src.distinct()), maxBucket)),
+    IndexTable("clusters", distinctOn("keeper"),
+      (src, n, restrict) => restrict(minBy("keeper", "label")(src, n))),
+    bandTable(maxBucket),
     folded("shingles", oneShingleSet),
-    folded("hashes", _.distinct()))
+    folded("hashes", distinctOn("content_hash")))
 
   /** The chunk index ([[incrementalCdcDedup]]): one (ph, owner) table,
     * resolved to each hash's min owner — min is associative and the read
@@ -1120,7 +1165,8 @@ object Dedup {
     * src/dest dirs, manifest written after ALL) and overlap, so one
     * table's rewrite tail back-fills the others' (Par §2.6; r17).
     *  - whole form (no `fullRewriteOver`, no `retire`): every table's
-    *    `rewrite`, one shuffle per table, sized by the index;
+    *    `rewrite`, one shuffle per table, [[partsForBytes]] of its bytes
+    *    wide;
     *  - delta form (`fullRewriteOver`): churn-proportional
     *    [[moveTableDelta]] with that tier budget, escalating to the
     *    table's `rewrite`;
@@ -1138,12 +1184,14 @@ object Dedup {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def src(t: IndexTable) = SedReader.parquet(spark, s"$path/${t.name}")
-    val retired = retire.map(
-      _(tables.head.rewrite(src(tables.head), identity).localCheckpoint(true)))
+    def parts(t: IndexTable) = partsForBytes(
+      partFiles(fs, new org.apache.hadoop.fs.Path(s"$path/${t.name}")).map(_.getLen).sum)
+    val retired = retire.map(_(tables.head.rewrite(src(tables.head), parts(tables.head), identity)
+      .localCheckpoint(true)))
     val manifest = fullRewriteOver.map(over => (over, readCompactManifest(fs, path)))
     val moved = Par.run(tables.map { t => () =>
-      val full = () => retired.fold(t.rewrite(src(t), identity))(r =>
-          if (t eq tables.head) r.kept else t.rewrite(src(t), r.restrict))
+      val full = () => retired.fold(t.rewrite(src(t), parts(t), identity))(r =>
+          if (t eq tables.head) r.kept else t.rewrite(src(t), parts(t), r.restrict))
         .write.mode("overwrite").parquet(s"$destPath/${t.name}")
       val move = manifest match {
         case Some((over, m)) =>
@@ -1222,8 +1270,12 @@ object Dedup {
     * count); the classification probes the index with explicit
     * broadcasts of that relation, and the admit appends its band keys
     * and shingle sets: the job count depends only on the data (11 for
-    * a plain batch of perfbench's feed, 6 with no index yet), never on
-    * run-time join choices. DedupIngestSpec pins
+    * a plain batch of perfbench's feed, 6 with no index yet, 17 for the
+    * batch whose swap is the first), never on run-time join choices.
+    * No shuffle on this path is sized by `spark.sql.shuffle.partitions`:
+    * the keeper shuffle is as wide as the delta is read, the id shuffle
+    * as wide as the delta side, and each compaction shuffle one
+    * partition per ~128 MB of the table it rewrites. DedupIngestSpec pins
     * loop == from-scratch classification through swaps and the crash
     * fixtures; DedupIngestJobsSpec the job counts. */
   def dedupIndexIngest(spark: org.apache.spark.sql.SparkSession,
@@ -1239,7 +1291,7 @@ object Dedup {
     // keys, shingle set) is materialized, and the same job counts the
     // guard's (min, max, count) — the guard still runs before any write
     val (side, ingestMm) = org.apache.spark.sql.graft.LocalMaterialize.withRange(
-      deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN)
+      deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
         .withColumn("__idl", col(idCol).cast("long")), "__idl")
     val isReplay = checkIngestRange(spark, active, ingestMm, "hashes", "keeper")
     // no index yet: the classification is a projection of `side`, and
@@ -1696,7 +1748,7 @@ object Dedup {
     * `maxBucket` (the same LSH skew cap the per-batch probe applies —
     * an index bucket over the cap implies the global bucket is too, so
     * pruning it changes nothing the capped probe would have used). One
-    * shuffle per table, sized by the index, run at maintenance cadence —
+    * shuffle per table, sized by its bytes, run at maintenance cadence —
     * never per batch. The `_ingest_max` marker is carried over so the
     * monotone-ingestion guard survives compaction. */
   def compactSplitIndex(spark: org.apache.spark.sql.SparkSession,

@@ -493,44 +493,48 @@ object PipelineQueries {
     * empty corpus (dup_delta/new only), later batches chain. The
     * trajectory certifies classify + admit + the mid-feed generation
     * swap end to end, since a swap that changed any classification
-    * would hash-mismatch here. */
+    * would hash-mismatch here. Every CTE is MATERIALIZED: DuckDB
+    * otherwise inlines a CTE at each of its references, and each stage
+    * references the earlier ones, so the inlined plan grows with every
+    * stage and does not finish (it changes how DuckDB evaluates the
+    * query, not what it returns). */
   private[graft] lazy val dedupIngestOracle: String = {
     import graft.functions.SedFunctions.d2s
     val shHash = s"list_transform(${shinglesSqlFrag("l", ShingleN)}, s -> ${hash32Frag("s")})"
     def shSet(table: String, out: String) =
-      s"""$out AS (SELECT doc_id, list_distinct($shHash) AS sh
+      s"""$out AS MATERIALIZED (SELECT doc_id, list_distinct($shHash) AS sh
          FROM (SELECT doc_id, $toksSqlFrag AS l FROM $table
                WHERE len($toksSqlFrag) >= $ShingleN))"""
     def stage(k: Int, corpus: String): String =
-      s"""delta_$k AS (SELECT doc_id, text FROM batches WHERE bt = $k),
-         chash_$k AS (SELECT md5(text) AS h, doc_id AS ck FROM $corpus),
-         csig_$k AS (${minhashSigSqlFor(corpus)}),
-         cband0_$k AS (${bandSelectsSqlFor(s"csig_$k")}),
-         cbok_$k AS (SELECT band, key FROM cband0_$k GROUP BY band, key
+      s"""delta_$k AS MATERIALIZED (SELECT doc_id, text FROM batches WHERE bt = $k),
+         chash_$k AS MATERIALIZED (SELECT md5(text) AS h, doc_id AS ck FROM $corpus),
+         csig_$k AS MATERIALIZED (${minhashSigSqlFor(corpus)}),
+         cband0_$k AS MATERIALIZED (${bandSelectsSqlFor(s"csig_$k")}),
+         cbok_$k AS MATERIALIZED (SELECT band, key FROM cband0_$k GROUP BY band, key
                      HAVING COUNT(*) <= $MaxBucket),
-         cband_$k AS (SELECT cband0_$k.* FROM cband0_$k JOIN cbok_$k USING (band, key)),
+         cband_$k AS MATERIALIZED (SELECT cband0_$k.* FROM cband0_$k JOIN cbok_$k USING (band, key)),
          ${shSet(corpus, s"csh_$k")},
-         dhash_$k AS (SELECT doc_id, md5(text) AS h FROM delta_$k),
-         dkeep_$k AS (SELECT h, MIN(doc_id) AS dk FROM dhash_$k GROUP BY h),
-         tagged_$k AS (SELECT dh.doc_id, chash_$k.ck, dkeep_$k.dk FROM dhash_$k dh
+         dhash_$k AS MATERIALIZED (SELECT doc_id, md5(text) AS h FROM delta_$k),
+         dkeep_$k AS MATERIALIZED (SELECT h, MIN(doc_id) AS dk FROM dhash_$k GROUP BY h),
+         tagged_$k AS MATERIALIZED (SELECT dh.doc_id, chash_$k.ck, dkeep_$k.dk FROM dhash_$k dh
            LEFT JOIN chash_$k USING (h) JOIN dkeep_$k USING (h)),
-         surv_$k AS (SELECT delta_$k.* FROM delta_$k JOIN tagged_$k USING (doc_id)
+         surv_$k AS MATERIALIZED (SELECT delta_$k.* FROM delta_$k JOIN tagged_$k USING (doc_id)
            WHERE ck IS NULL AND doc_id = dk),
-         dsig_$k AS (${minhashSigSqlFor(s"surv_$k")}),
-         dband_$k AS (${bandSelectsSqlFor(s"dsig_$k")}),
-         cand_$k AS (SELECT DISTINCT db.doc_id AS a_id, cb.doc_id AS b_id
+         dsig_$k AS MATERIALIZED (${minhashSigSqlFor(s"surv_$k")}),
+         dband_$k AS MATERIALIZED (${bandSelectsSqlFor(s"dsig_$k")}),
+         cand_$k AS MATERIALIZED (SELECT DISTINCT db.doc_id AS a_id, cb.doc_id AS b_id
            FROM dband_$k db JOIN cband_$k cb USING (band, key)),
          ${shSet(s"surv_$k", s"dsh_$k")},
-         ver_$k AS (SELECT a_id, b_id FROM (
+         ver_$k AS MATERIALIZED (SELECT a_id, b_id FROM (
              SELECT c.a_id, c.b_id,
                CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter,
                CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS BIGINT) AS uni
              FROM cand_$k c JOIN dsh_$k a ON a.doc_id = c.a_id
              JOIN csh_$k b ON b.doc_id = c.b_id)
            WHERE CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE) >= ${d2s(IncMinJ)}),
-         near_$k AS (SELECT a_id AS doc_id, MIN(b_id) AS nk, COUNT(*) AS nn
+         near_$k AS MATERIALIZED (SELECT a_id AS doc_id, MIN(b_id) AS nk, COUNT(*) AS nn
            FROM ver_$k GROUP BY a_id),
-         classified_$k AS (SELECT t.doc_id,
+         classified_$k AS MATERIALIZED (SELECT t.doc_id,
              CASE WHEN t.ck IS NOT NULL THEN 'dup_corpus'
                   WHEN t.doc_id > t.dk THEN 'dup_delta'
                   WHEN n.nk IS NOT NULL THEN 'near_corpus'
@@ -539,15 +543,15 @@ object PipelineQueries {
                n.nk, -1) AS BIGINT) AS match_id,
              CAST(COALESCE(n.nn, 0) AS BIGINT) AS n_near
            FROM tagged_$k t LEFT JOIN near_$k n USING (doc_id)),
-         adm_$k AS (SELECT d.doc_id, d.text FROM delta_$k d
+         adm_$k AS MATERIALIZED (SELECT d.doc_id, d.text FROM delta_$k d
            JOIN classified_$k c USING (doc_id) WHERE c.status = 'new')"""
-    s"""WITH batches AS (SELECT doc_id, text,
+    s"""WITH batches AS MATERIALIZED (SELECT doc_id, text,
            NTILE(3) OVER (ORDER BY doc_id) AS bt FROM documents),
-       corpus_1 AS (SELECT doc_id, text FROM documents WHERE FALSE),
+       corpus_1 AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE FALSE),
        ${stage(1, "corpus_1")},
-       corpus_2 AS (SELECT * FROM adm_1),
+       corpus_2 AS MATERIALIZED (SELECT * FROM adm_1),
        ${stage(2, "corpus_2")},
-       corpus_3 AS (SELECT * FROM adm_1 UNION ALL SELECT * FROM adm_2),
+       corpus_3 AS MATERIALIZED (SELECT * FROM adm_1 UNION ALL SELECT * FROM adm_2),
        ${stage(3, "corpus_3")}
        SELECT doc_id, status, match_id, n_near FROM classified_1
        UNION ALL SELECT doc_id, status, match_id, n_near FROM classified_2

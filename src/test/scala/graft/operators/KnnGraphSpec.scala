@@ -103,4 +103,20 @@ class KnnGraphSpec extends SparkSpecBase {
       assert(got == want && got.nonEmpty, s"k=$k")
     }
   }
+
+  test("the k-NN vector broadcast is decided on n·(8 + 4·dim) bytes, at the budget inclusive") {
+    val budget = Ann.MaxKnnBroadcastBytes
+    // 64-dim rows are 264 bytes: the last row count that fits, and one more
+    val fit = budget / 264
+    assert(Ann.knnBroadcastFits(fit, 64))
+    assert(!Ann.knnBroadcastFits(fit + 1, 64))
+    // exactly at the budget: 8 + 4·dim divides it when dim = 2^k − 2
+    assert(budget % (8 + 4 * 254) == 0)
+    assert(Ann.knnBroadcastFits(budget / (8 + 4 * 254), 254))
+    assert(!Ann.knnBroadcastFits(budget / (8 + 4 * 254) + 1, 254))
+    // the same row count flips with the width alone
+    assert(Ann.knnBroadcastFits(2000000L, 64))
+    assert(!Ann.knnBroadcastFits(2000000L, 128))
+    assert(Ann.knnBroadcastFits(0L, 0))
+  }
 }
