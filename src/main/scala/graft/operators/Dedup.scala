@@ -722,13 +722,11 @@ object Dedup {
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
                       path: String,
                       numHashes: Int = 12, rowsPerBand: Int = 3,
-                      shingleN: Int = 3, maxBucket: Int = 10000): Unit = {
-    val admit = deltaSide(corpus, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
-      .filter(col(idCol) === col("__dk"))
-      .localCheckpoint(true) // feeds all three writes
-    writeAdmitted(admit, idCol, path, "overwrite",
-      capBuckets(_, plannedPartitions(admit), maxBucket))
-  }
+                      shingleN: Int = 3, maxBucket: Int = 10000): Unit =
+    writeAdmitted(deltaSide(corpus, idCol, textCol, numHashes, rowsPerBand, shingleN)
+        .filter(col(idCol) === col("__dk"))
+        .localCheckpoint(true), // feeds all three writes
+      idCol, path, "overwrite", capBuckets(_, maxBucket))
 
   /** Dedup an arriving delta batch against a [[buildDedupIndex]] index
     * plus itself — the realistic ingestion shape at corpus scale, where
@@ -761,8 +759,7 @@ object Dedup {
                        path: String,
                        numHashes: Int = 12, rowsPerBand: Int = 3,
                        shingleN: Int = 3, minJaccard: Double = 0.8): DataFrame =
-    classifyAgainst(spark,
-        deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = false),
+    classifyAgainst(spark, deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN),
         idCol, path, minJaccard)._1
       .select(col(idCol), col("status"), col("match_id"), col("n_near"))
 
@@ -773,17 +770,16 @@ object Dedup {
     * position b) and sorted distinct shingle set `__sh` — the values the
     * index stores for a representative. MinHash runs once per
     * batch-unique document; the in-batch keeper costs one shuffle on the
-    * hash. A caller that materializes the side (`sized`) gets that
-    * shuffle as wide as `delta` is read ([[plannedPartitions]]); without
-    * it the planner places the shuffle, so a read of `__h` and the id
-    * alone (the exact probe of [[incrementalDedup]]) prunes it away. */
+    * hash, `parts` wide when given; without it the planner places that
+    * shuffle (AQE may coalesce it), so a read of `__h` and the id alone
+    * (the exact probe of [[incrementalDedup]]) prunes it away. */
   private def deltaSide(delta: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, rowsPerBand: Int, shingleN: Int,
-                        sized: Boolean): DataFrame = {
+                        parts: Option[Int] = None): DataFrame = {
     val numBands = numHashes / rowsPerBand
     val sig = (j: Int) => element_at(col("__sigs"), j + 1)
     val hashed = delta.select(col(idCol), col(textCol), md5(col(textCol).cast("binary")).as("__h"))
-    (if (sized) hashed.repartition(plannedPartitions(delta), col("__h")) else hashed)
+    parts.fold(hashed)(hashed.repartition(_, col("__h")))
       .withColumn("__dk", min(col(idCol)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__h")))
       // tokens materialized as their own column (see minhashSignatures)
@@ -798,22 +794,14 @@ object Dedup {
         array_sort(array_distinct(col("__shh"))).as("__sh"))
   }
 
-  /** The partition count `df` is planned with, found without running a
-    * job: an exchange's width, a file scan's split count, an existing
-    * RDD's partitions; a union sums its children, and any other operator
-    * keeps its child's. It sizes a shuffle that runs once per input. */
-  private[operators] def plannedPartitions(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, SparkPlan, UnionExec}
-    def of(p: SparkPlan): Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => of(a.initialPlan)
-      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
-      case l: LeafExecNode => l.execute().getNumPartitions
-      case u: UnionExec => u.children.map(of).sum
-      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
-      case _ => p.children.map(of).max
-    }
-    math.max(1, of(df.queryExecution.executedPlan))
-  }
+  /** How many partitions `df` is read in, found by planning alone (no
+    * job): the sum over its scans of a file scan's split count, or an
+    * RDD's or local relation's partitions. */
+  private[operators] def readPartitions(df: DataFrame): Int =
+    math.max(1, df.queryExecution.sparkPlan.collectLeaves().map {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.inputRDD.getNumPartitions
+      case leaf => leaf.execute().getNumPartitions
+    }.sum)
 
   /** An index table opened without Spark's schema-inference job (the
     * footer schema of [[SedReader.parquet]]); `None` while the
@@ -835,9 +823,9 @@ object Dedup {
     * broadcast(delta band keys) gives candidate pairs; shingles ⋈
     * broadcast(candidates) gives each candidate's index shingle set.
     * Their rows and the delta rows are unioned and partitioned by id
-    * once, as wide as `side` ([[plannedPartitions]]); windows over each
-    * id spread the delta doc's shingle set to its candidates, verify
-    * Jaccard and fold the matches. With
+    * once, `idParts` wide when given (else where the planner places
+    * it); windows over each id spread the delta doc's shingle set to
+    * its candidates, verify Jaccard and fold the matches. With
     * `corpusBelow` (the ingest loop's batch minimum) only keepers below
     * it are candidates: under the monotone-id contract, band rows at or
     * above it were left by this very batch's admit before a crash lost
@@ -845,7 +833,8 @@ object Dedup {
     * from the original classification. */
   private def classifyAgainst(spark: org.apache.spark.sql.SparkSession, side: DataFrame,
                               idCol: String, path: String, minJaccard: Double,
-                              corpusBelow: Option[Long] = None): (DataFrame, Boolean) = {
+                              corpusBelow: Option[Long] = None,
+                              idParts: Option[Int] = None): (DataFrame, Boolean) = {
     val id = col(idCol)
     val idType = side.schema(idCol).dataType
     val exact = indexTable(spark, s"$path/hashes").map(_
@@ -872,12 +861,11 @@ object Dedup {
           lit(null).cast(idType).as("__nk"), lit(null).cast("long").as("__nn"))
       else {
         val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
-        val spread = probes.foldLeft(side.select(col("*"), lit(true).as("__m"),
+        val probed = probes.foldLeft(side.select(col("*"), lit(true).as("__m"),
             lit(null).cast(idType).as("__ck"), lit(null).cast(idType).as("__b"),
             lit(null).cast("array<bigint>").as("__bsh")))(
             _.unionByName(_, allowMissingColumns = true))
-          // the one shuffle on the id, as wide as the delta side
-          .repartition(plannedPartitions(side), id)
+        val spread = idParts.fold(probed)(probed.repartition(_, id)) // the one shuffle on the id
           .select(col("*"), first(col("__sh"), ignoreNulls = true).over(w).as("__ash"))
         val inter = org.apache.spark.sql.graft.SortedIntersectCount(col("__ash"), col("__bsh"))
         // the same double division as jaccardOf
@@ -921,7 +909,7 @@ object Dedup {
                          shingleN: Int = 3): Unit =
     writeAdmitted(deltaSide(delta.join(
         classified.filter(col("status") === "new").select(idCol), Seq(idCol), "left_semi"),
-        idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
+        idCol, textCol, numHashes, rowsPerBand, shingleN)
         .localCheckpoint(true), // feeds three appends; hashes/ LAST is the gate
       idCol, path, "append")
 
@@ -947,13 +935,14 @@ object Dedup {
   }
 
   /** The LSH skew guard on a band table, in one shuffle: the rows are
-    * hash-partitioned `n` ways on (band, key), replay duplicates drop,
-    * and buckets (band, key) then holding more than `maxBucket` rows are
-    * dropped by a window count over the same partitioning — degenerate
-    * boilerplate belongs to the exact-hash pass, and a hot key would fan
-    * every future probe out against the whole bucket. */
-  private def capBuckets(bands: DataFrame, n: Int, maxBucket: Int): DataFrame =
-    distinctOn("band", "key")(bands, n)
+    * hash-partitioned on (band, key) (the planner's width, which AQE
+    * may coalesce), replay duplicates drop, and buckets (band, key) then
+    * holding more than `maxBucket` rows are dropped by a window count
+    * over the same partitioning — degenerate boilerplate belongs to the
+    * exact-hash pass, and a hot key would fan every future probe out
+    * against the whole bucket. */
+  private def capBuckets(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands.repartition(col("band"), col("key")).distinct()
       .withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("band", "key")))
       .filter(col("__n") <= maxBucket).drop("__n")
@@ -961,8 +950,8 @@ object Dedup {
   /** Rewrite a dedup index compactly: coalesce the append-accumulated
     * small files and re-apply the band bucket cap (appends admit rows
     * uncapped — see [[appendToDedupIndex]]). One shuffle per table,
-    * sized by the table's bytes ([[partsForBytes]]), run at maintenance
-    * cadence — never per batch. */
+    * sized by the index, run at maintenance cadence — never per
+    * batch. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, destPath: String,
                         maxBucket: Int = 10000): Unit =
@@ -976,17 +965,17 @@ object Dedup {
     * next swap's quiet/busy oracle. JSON {table: [names...]}. */
   private val CompactManifest = "_compacted_files.json"
 
-  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).filter(st => st.isFile && st.getPath.getName.startsWith("part-")).toSeq
-
   private def partFilesOf(fs: org.apache.hadoop.fs.FileSystem,
                           dir: org.apache.hadoop.fs.Path): Seq[String] =
-    partFiles(fs, dir).map(_.getPath.getName).sorted
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).collect {
+      case st if st.isFile && st.getPath.getName.startsWith("part-") =>
+        st.getPath.getName
+    }.toSeq.sorted
 
-  /** The shuffle width of a compaction over `bytes` of index files, and
-    * so the number of files it lands: one per ~128 MB, at most 512. */
+  /** The shuffle width of a delta tier's fold over `bytes` of index
+    * files, and so the number of files it lands: one per ~128 MB, at
+    * most 512. */
   private[operators] def partsForBytes(bytes: Long): Int =
     math.min(512L, bytes / (128L * 1024 * 1024) + 1).toInt
 
@@ -1072,7 +1061,7 @@ object Dedup {
         s"$destPath/.${table}_delta_tmp")
       val deltaPaths = deltaNames.map(n => new org.apache.hadoop.fs.Path(srcDir, n))
       fold(SedReader.parquetFiles(spark, deltaPaths.map(_.toString)),
-          partsForBytes(deltaPaths.map(p => fs.getFileStatus(p).getLen).sum))
+          Some(partsForBytes(deltaPaths.map(p => fs.getFileStatus(p).getLen).sum)))
         .write.mode("overwrite").parquet(tmp.toString)
       // part names embed a fresh write-job UUID — never collide with
       // the linked base names
@@ -1086,35 +1075,41 @@ object Dedup {
     }
   }
 
-  /** A transform of an index table whose one shuffle is `n` partitions
-    * wide — [[partsForBytes]] of the bytes it reads. */
-  private type Sized = (DataFrame, Int) => DataFrame
+  /** A transform of an index table with one shuffle: `Some(n)` makes it
+    * `n` partitions wide (a delta fold, [[partsForBytes]] of the bytes
+    * it reads); `None` leaves its width to the planner and AQE (a whole
+    * rewrite). */
+  private type Sized = (DataFrame, Option[Int]) => DataFrame
 
   /** One table of a table-list index family, for [[compactTables]]:
     * `fold` collapses one delta tier's crash-replay debris (replays
     * re-append within one swap interval, so duplicates never straddle
-    * the base/delta boundary); `rewrite(src, n, restrict)` is the
-    * table's whole semantic rewrite, `n` partitions wide, applying a
-    * retention horizon's `restrict` at the point where it is sound for
-    * that table. */
+    * the base/delta boundary); `rewrite(src, restrict)` is the table's
+    * whole semantic rewrite, applying a retention horizon's `restrict`
+    * at the point where it is sound for that table. */
   private[operators] final case class IndexTable(
       name: String, fold: Sized,
-      rewrite: (DataFrame, Int, DataFrame => DataFrame) => DataFrame)
+      rewrite: (DataFrame, DataFrame => DataFrame) => DataFrame)
 
   /** A table whose whole rewrite is its delta fold, restricted last. */
   private def folded(name: String, fold: Sized): IndexTable =
-    IndexTable(name, fold, (src, n, restrict) => restrict(fold(src, n)))
+    IndexTable(name, fold, (src, restrict) => restrict(fold(src, None)))
 
-  /** Distinct rows, hash-partitioned on `keys` — a grouping on a superset
-    * of the partitioning keys needs no second exchange. */
+  /** `df` hash-partitioned on `keys`, `n` ways; without `n`, `df` as is,
+    * and the grouping after it places its own shuffle. */
+  private def clustered(df: DataFrame, n: Option[Int], keys: String*): DataFrame =
+    n.fold(df)(df.repartition(_, keys.map(col): _*))
+
+  /** Distinct rows, [[clustered]] on `keys` — a grouping on a superset of
+    * the partitioning keys needs no second exchange. */
   private def distinctOn(keys: String*): Sized =
-    (df, n) => df.repartition(n, keys.map(col): _*).distinct()
+    (df, n) => clustered(df, n, keys: _*).distinct()
 
   private def minBy(key: String, v: String): Sized =
-    (df, n) => df.repartition(n, col(key)).groupBy(key).agg(min(v).as(v))
+    (df, n) => clustered(df, n, key).groupBy(key).agg(min(v).as(v))
 
   private val oneShingleSet: Sized =
-    (df, n) => df.repartition(n, col("keeper")).groupBy("keeper").agg(first("sh").as("sh"))
+    (df, n) => clustered(df, n, "keeper").groupBy("keeper").agg(first("sh").as("sh"))
 
   /** A band table: replay duplicates fold within a delta tier; the whole
     * rewrite restricts first, then drops duplicates and applies the
@@ -1122,7 +1117,7 @@ object Dedup {
     * push a kept bucket over the cap. */
   private def bandTable(maxBucket: Int): IndexTable =
     IndexTable("bands", distinctOn("band", "key"),
-      (src, n, restrict) => capBuckets(restrict(src), n, maxBucket))
+      (src, restrict) => capBuckets(restrict(src), maxBucket))
 
   /** The exact+near dedup index ([[buildDedupIndex]]): hashes resolve to
     * the min keeper, shingles keep one set per keeper, and bands are
@@ -1140,7 +1135,7 @@ object Dedup {
     * ([[bandTable]]). */
   private[operators] def splitTables(maxBucket: Int): Seq[IndexTable] = Seq(
     IndexTable("clusters", distinctOn("keeper"),
-      (src, n, restrict) => restrict(minBy("keeper", "label")(src, n))),
+      (src, restrict) => restrict(minBy("keeper", "label")(src, None))),
     bandTable(maxBucket),
     folded("shingles", oneShingleSet),
     folded("hashes", distinctOn("content_hash")))
@@ -1165,8 +1160,7 @@ object Dedup {
     * src/dest dirs, manifest written after ALL) and overlap, so one
     * table's rewrite tail back-fills the others' (Par §2.6; r17).
     *  - whole form (no `fullRewriteOver`, no `retire`): every table's
-    *    `rewrite`, one shuffle per table, [[partsForBytes]] of its bytes
-    *    wide;
+    *    `rewrite`, one shuffle per table, sized by the index;
     *  - delta form (`fullRewriteOver`): churn-proportional
     *    [[moveTableDelta]] with that tier budget, escalating to the
     *    table's `rewrite`;
@@ -1184,14 +1178,12 @@ object Dedup {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def src(t: IndexTable) = SedReader.parquet(spark, s"$path/${t.name}")
-    def parts(t: IndexTable) = partsForBytes(
-      partFiles(fs, new org.apache.hadoop.fs.Path(s"$path/${t.name}")).map(_.getLen).sum)
-    val retired = retire.map(_(tables.head.rewrite(src(tables.head), parts(tables.head), identity)
-      .localCheckpoint(true)))
+    val retired = retire.map(
+      _(tables.head.rewrite(src(tables.head), identity).localCheckpoint(true)))
     val manifest = fullRewriteOver.map(over => (over, readCompactManifest(fs, path)))
     val moved = Par.run(tables.map { t => () =>
-      val full = () => retired.fold(t.rewrite(src(t), parts(t), identity))(r =>
-          if (t eq tables.head) r.kept else t.rewrite(src(t), parts(t), r.restrict))
+      val full = () => retired.fold(t.rewrite(src(t), identity))(r =>
+          if (t eq tables.head) r.kept else t.rewrite(src(t), r.restrict))
         .write.mode("overwrite").parquet(s"$destPath/${t.name}")
       val move = manifest match {
         case Some((over, m)) =>
@@ -1272,10 +1264,11 @@ object Dedup {
     * and shingle sets: the job count depends only on the data (11 for
     * a plain batch of perfbench's feed, 6 with no index yet, 17 for the
     * batch whose swap is the first), never on run-time join choices.
-    * No shuffle on this path is sized by `spark.sql.shuffle.partitions`:
-    * the keeper shuffle is as wide as the delta is read, the id shuffle
-    * as wide as the delta side, and each compaction shuffle one
-    * partition per ~128 MB of the table it rewrites. DedupIngestSpec pins
+    * The keeper and id shuffles are as wide as the delta is read
+    * ([[readPartitions]]) and a delta tier's fold one partition per
+    * ~128 MB ([[partsForBytes]]), so `spark.sql.shuffle.partitions`
+    * sizes none of them; a table's whole rewrite leaves its shuffle to
+    * the planner and AQE. DedupIngestSpec pins
     * loop == from-scratch classification through swaps and the crash
     * fixtures; DedupIngestJobsSpec the job counts. */
   def dedupIndexIngest(spark: org.apache.spark.sql.SparkSession,
@@ -1290,14 +1283,15 @@ object Dedup {
     // the delta is read ONCE: its delta side (hash, in-batch keeper, band
     // keys, shingle set) is materialized, and the same job counts the
     // guard's (min, max, count) — the guard still runs before any write
+    val width = Some(readPartitions(delta))
     val (side, ingestMm) = org.apache.spark.sql.graft.LocalMaterialize.withRange(
-      deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN, sized = true)
+      deltaSide(delta, idCol, textCol, numHashes, rowsPerBand, shingleN, width)
         .withColumn("__idl", col(idCol).cast("long")), "__idl")
     val isReplay = checkIngestRange(spark, active, ingestMm, "hashes", "keeper")
     // no index yet: the classification is a projection of `side`, and
     // the first appends found the tables
     val (probed, readsIndex) = classifyAgainst(spark, side, idCol, active, minJaccard,
-      ingestMm.map(_._1))
+      ingestMm.map(_._1), width)
     // the admit below APPENDS to the tables this plan reads
     val full = if (readsIndex) probed.localCheckpoint(true) else probed
     ingestMm.foreach(recordIngestMax(spark, active, _))
@@ -1748,7 +1742,7 @@ object Dedup {
     * `maxBucket` (the same LSH skew cap the per-batch probe applies —
     * an index bucket over the cap implies the global bucket is too, so
     * pruning it changes nothing the capped probe would have used). One
-    * shuffle per table, sized by its bytes, run at maintenance cadence —
+    * shuffle per table, sized by the index, run at maintenance cadence —
     * never per batch. The `_ingest_max` marker is carried over so the
     * monotone-ingestion guard survives compaction. */
   def compactSplitIndex(spark: org.apache.spark.sql.SparkSession,

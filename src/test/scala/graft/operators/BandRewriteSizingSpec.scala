@@ -5,9 +5,10 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpecBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,7 +17,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * a table computed here from the same rows, for the dedup family and
   * for the split family under a retention horizon; and the widths of
   * the dedup-ingest loop's shuffles, which come from its input and its
-  * index bytes, never from `spark.sql.shuffle.partitions`. */
+  * delta tiers' bytes, never from `spark.sql.shuffle.partitions`, while
+  * whole rewrites and the unsized entry points leave theirs to the
+  * planner and AQE. */
 class BandRewriteSizingSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -92,42 +95,65 @@ class BandRewriteSizingSpec extends SparkSpecBase {
     assert(landed(dest) == (want, 1))
   }
 
-  /** The ShuffleExchangeExec widths of every query `ns` executes. */
-  private final class ShuffleWidths(ns: org.apache.spark.sql.SparkSession) {
-    private val widths = new ConcurrentLinkedQueue[Integer]()
+  /** The shuffles (origin, width) of every query `ns` executes, and the
+  * task count of every stage its jobs in job group `group` submit. */
+  private final class ShuffleLog(ns: org.apache.spark.sql.SparkSession, group: String) {
+    private val shuffles = new ConcurrentLinkedQueue[(String, Int)]()
+    private val stageTasks = new ConcurrentLinkedQueue[Integer]()
     @volatile private var marker = ""
     @volatile private var seen = new CountDownLatch(0)
     private val helper = new AdaptiveSparkPlanHelper {}
-    private def of(p: SparkPlan): Seq[Int] =
-      helper.collectWithSubqueries(p) { case s: ShuffleExchangeExec => s.numPartitions }
+    private def of(p: SparkPlan): Seq[(String, Int)] =
+      helper.collectWithSubqueries(p) {
+        case s: ShuffleExchangeExec => (s.shuffleOrigin.toString, s.numPartitions)
+      }
     private val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (marker.nonEmpty && qe.logical.toString.contains(marker)) seen.countDown()
-        else of(qe.executedPlan).foreach(w => widths.add(w))
+        else of(qe.executedPlan).foreach(shuffles.add)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    private val stages = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          stageTasks.add(e.stageInfo.numTasks)
+    }
     ns.listenerManager.register(listener)
+    ns.sparkContext.addSparkListener(stages)
+    ns.sparkContext.setJobGroup(group, group)
 
-    /** Every width seen so far, once the listener bus has caught up. */
-    def all(): Seq[Int] = {
-      marker = s"shuffle-widths-drain-${System.nanoTime()}"
+    /** Every (origin, width) and stage task count seen so far, once the
+      * listener bus has caught up. */
+    def all(): (Seq[(String, Int)], Seq[Int]) = {
+      marker = s"shuffle-log-drain-${System.nanoTime()}"
       seen = new CountDownLatch(1)
       ns.range(0, 1, 1, 1).select(lit(marker).as("m")).collect()
       assert(seen.await(120, TimeUnit.SECONDS), "listener bus did not drain")
-      widths.asScala.map(_.toInt).toSeq
+      (shuffles.asScala.toSeq, stageTasks.asScala.map(_.toInt).toSeq)
     }
 
-    def close(): Unit = ns.listenerManager.unregister(listener)
+    def close(): Unit = {
+      ns.sparkContext.clearJobGroup()
+      ns.sparkContext.removeSparkListener(stages)
+      ns.listenerManager.unregister(listener)
+    }
   }
 
-  test("no shuffle of the dedup-ingest loop is sized by spark.sql.shuffle.partitions") {
+  /** A session whose `spark.sql.shuffle.partitions` is Spark's default. */
+  private def defaultSession(): org.apache.spark.sql.SparkSession = {
     val ns = spark.newSession()
     ns.conf.set("spark.sql.shuffle.partitions", "200")
+    ns
+  }
+
+  /** `n` batches of (doc_id, text), each in 3 partitions: 20 fresh
+    * documents with exact copies and near copies of earlier batches'. */
+  private def feed(ns: org.apache.spark.sql.SparkSession, n: Int) = {
     val rng = new scala.util.Random(1010)
-    def words(n: Int) = (0 until n).map(_ => s"w${rng.nextInt(200)}").mkString(" ")
+    def words(k: Int) = (0 until k).map(_ => s"w${rng.nextInt(200)}").mkString(" ")
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     var id = 0L
-    val batches = (0 until 3).map { _ =>
+    (0 until n).map { _ =>
       val earlier = seen.toSeq
       val rows = (0 until 20).flatMap { i =>
         val t = words(15)
@@ -138,26 +164,54 @@ class BandRewriteSizingSpec extends SparkSpecBase {
       } ++ earlier.take(3).map { t => id += 1; (id, t + " w999") }
       ns.createDataFrame(ns.sparkContext.parallelize(rows, 3)).toDF("doc_id", "text")
     }
+  }
+
+  private def widthsOf(shuffles: Seq[(String, Int)]) =
+    shuffles.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("no dedup-ingest loop shuffle but a whole rewrite's is sized by spark.sql.shuffle.partitions") {
+    val ns = defaultSession()
+    val batches = feed(ns, 6)
     val root = tmp("graft-ingest-widths")
-    val log = new ShuffleWidths(ns)
-    try {
+    val log = new ShuffleLog(ns, s"ingest-widths-${System.nanoTime()}")
+    val (shuffles, tasks) = try {
+      // batch 2 compacts by the first, whole rewrite; batch 5 folds the
+      // delta tier appended since
       batches.zipWithIndex.foreach { case (b, i) =>
-        assert(Dedup.plannedPartitions(b) == 3)
+        assert(Dedup.readPartitions(b) == 3)
         Dedup.dedupIndexIngest(ns, b, "doc_id", "text", root, i, compactEvery = 3).collect()
       }
-      val widths = log.all()
-      val rootBytes = {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size(_)).sum
-        finally s.close()
-      }
-      // the keeper and id shuffles run as wide as the 3-partition input,
-      // every compaction shuffle one partition per ~128 MB of its table
-      val rule = math.max(3, Dedup.partsForBytes(rootBytes))
-      info(s"shuffle widths: ${widths.groupBy(identity).map { case (w, ws) => w -> ws.size }}")
-      assert(widths.nonEmpty && widths.forall(_ <= rule), s"widths $widths over $rule")
-      assert(widths.toSet == Set(3, 1), s"widths $widths")
+      log.all()
     } finally log.close()
+    info(s"shuffles (origin, width): ${widthsOf(shuffles)}; stage tasks: ${tasks.distinct.sorted}")
+    val (sized, planned) = shuffles.partition(_._1 == REPARTITION_BY_NUM.toString)
+    // keeper and id shuffles as wide as the 3-partition input; each delta
+    // fold one partition per ~128 MB of the tier, here one
+    assert(sized.map(_._2).toSet == Set(3, 1), s"sized shuffles $sized")
+    // the whole rewrite's three tables (hashes, bands, shingles) are the
+    // only shuffles the planner sizes, and AQE coalesces their reads
+    assert(planned.size == 3 && planned.forall(_._2 == 200), s"planned shuffles $planned")
+    // (index scans run a task per small file; no stage runs one per
+    // spark.sql.shuffle.partitions partition)
+    assert(tasks.nonEmpty && tasks.max < 200, s"stage tasks $tasks")
+  }
+
+  test("incrementalDedup and appendToDedupIndex leave their shuffles to the planner and AQE") {
+    val ns = defaultSession()
+    val Seq(corpus, delta) = feed(ns, 2)
+    val idx = tmp("graft-incr-widths")
+    Dedup.buildDedupIndex(corpus, "doc_id", "text", idx)
+    val log = new ShuffleLog(ns, s"incr-widths-${System.nanoTime()}")
+    val (shuffles, tasks) = try {
+      val classified = Dedup.incrementalDedup(ns, delta, "doc_id", "text", idx).localCheckpoint(true)
+      assert(classified.filter(col("status") === "new").count() > 0)
+      Dedup.appendToDedupIndex(delta, classified, "doc_id", "text", idx)
+      log.all()
+    } finally log.close()
+    info(s"shuffles (origin, width): ${widthsOf(shuffles)}; stage tasks: ${tasks.distinct.sorted}")
+    assert(shuffles.nonEmpty && !shuffles.exists(_._1 == REPARTITION_BY_NUM.toString),
+      s"shuffles $shuffles")
+    // no stage runs one task per spark.sql.shuffle.partitions partition
+    assert(tasks.nonEmpty && tasks.max < 200, s"stage tasks $tasks")
   }
 }
